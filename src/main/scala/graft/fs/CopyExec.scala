@@ -1,5 +1,7 @@
 package graft.fs
 
+import scala.collection.mutable
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -25,10 +27,24 @@ final case class CopyResult(relPath: String, status: String, bytes: Long)
  * Scale: the input is a `Dataset[FileEntry]`; `repartition(parallelism)`
  * spreads files round-robin (replacing the reference's murmur3(size,mtime)
  * shuffle-key balancing, `Stage2DirectoryCopyMapper.java:116-125`).
+ *
+ * Small trees never reach Spark: `syncDir` and `equalDirs` first list both
+ * roots on the driver with a walk that stops at [[LocalCopyFiles]] files
+ * per side (or [[LocalCopyBytes]] source bytes). Under that bound the diff
+ * and the copies run in-process — the reference picks its in-process copy
+ * the same way, from the whole tree's size (`DistCpWrapper.java:117-136`).
+ * Over it, the manifests are listed and joined in Spark, so the driver
+ * never holds more than ~100 rows per side.
  */
 object CopyExec {
 
   val MaxRetries = 3
+
+  /** Whole-tree bound of the driver-side path: a tree is "small" while it
+    * has fewer files and (source side) fewer bytes than these (reference
+    * local-copy threshold, `DistCpWrapperOptions.java:41-42`). */
+  val LocalCopyFiles: Long = 100L
+  val LocalCopyBytes: Long = 256L << 20
 
   /** Copy one file with the full protocol (exposed for external copy
     * pipelines like BatchReplication stage 2). */
@@ -102,7 +118,8 @@ object CopyExec {
         case e: Throwable =>
           last = e
           attempt += 1
-          Thread.sleep(math.min(1000L << attempt, 8000L))
+          // back off between attempts only: a final failure returns at once
+          if (attempt < MaxRetries) Thread.sleep(math.min(1000L << attempt, 8000L))
       }
     }
     // best-effort staging cleanup: the UUID name is unique to this call,
@@ -123,17 +140,124 @@ object CopyExec {
     }
   }
 
+  /** Copy outcomes rolled up: counts, copied bytes, first failure. */
+  private final case class Tally(copied: Long, skipped: Long, bytes: Long,
+      failed: Long, firstFailure: String)
+
+  private def tally(rs: Seq[CopyResult]): Tally = Tally(
+    rs.count(_.status == "COPIED").toLong,
+    rs.count(_.status == "SKIPPED").toLong,
+    rs.filter(_.status == "COPIED").map(_.bytes).sum,
+    rs.count(_.status.startsWith("FAILED")).toLong,
+    rs.find(_.status.startsWith("FAILED")).map(_.status).getOrElse(""))
+
+  /** Visible files under `root` keyed by relative path, walked on the
+    * driver — or None as soon as the walk reaches `maxFiles` files or
+    * `maxBytes` bytes. The walk is lazy (`listStatusIterator`), so a large
+    * tree costs one listing page past the bound, not a full listing. Same
+    * hidden-file rule and missing-root-is-empty rule as `FsOps.listFiles`. */
+  private def listBounded(conf: Configuration, root: String, maxFiles: Long,
+      maxBytes: Long): Option[Map[String, FileEntry]] = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(conf)
+    val out = Map.newBuilder[String, FileEntry]
+    var files = 0L
+    var bytes = 0L
+    val dirs = mutable.Stack((rootPath, ""))
+    while (dirs.nonEmpty) {
+      val (dir, prefix) = dirs.pop()
+      try {
+        val it = fs.listStatusIterator(dir)
+        while (it.hasNext) {
+          val st = it.next()
+          val name = st.getPath.getName
+          if (!FsOps.isHidden(name)) {
+            val rel = if (prefix.isEmpty) name else s"$prefix/$name"
+            if (st.isDirectory) dirs.push((st.getPath, rel))
+            else {
+              files += 1
+              bytes += st.getLen
+              if (files >= maxFiles || bytes >= maxBytes) return None
+              out += rel -> FileEntry(root, rel, st.getLen, st.getModificationTime)
+            }
+          }
+        }
+      } catch { case _: java.io.FileNotFoundException => () }
+    }
+    Some(out.result())
+  }
+
+  /** Both trees' manifests while both are under the whole-tree bound (files
+    * per side, bytes on the source), else None. The destination is not
+    * walked once the source has crossed. */
+  private def smallTrees(conf: Configuration, srcRoot: String, destRoot: String,
+      maxFiles: Long, maxBytes: Long)
+      : Option[(Map[String, FileEntry], Map[String, FileEntry])] =
+    for {
+      src <- listBounded(conf, srcRoot, maxFiles, maxBytes)
+      dest <- listBounded(conf, destRoot, maxFiles, Long.MaxValue)
+    } yield (src, dest)
+
   /**
    * Directory replication driver (reference `DistCpWrapper.run`,
    * `utils/common/DistCpWrapper.java:41-220`): manifest-diff first, copy
-   * only missing/size-mismatched files, optionally delete dest-only files;
-   * small jobs short-circuit through a driver-side loop (the "local copy"
-   * path, threshold <256MB && <100 files).
+   * only missing/size-mismatched files, optionally delete dest-only files.
+   *
+   * Two bounds keep small work off Spark (reference local-copy threshold
+   * <256MB && <100 files, `DistCpWrapperOptions.java:41-42`):
+   *  - whole tree: while each side has fewer than `localCopyFiles` visible
+   *    files and the source fewer than `localCopyBytes` bytes, the listing,
+   *    diff, copies and deletes all run on the driver and no Spark job
+   *    starts;
+   *  - files to copy: over the tree bound the manifests are listed and
+   *    joined in Spark, and when fewer than `localCopyFiles` files and
+   *    `localCopyBytes` bytes need copying, the copies still run in a
+   *    driver loop instead of a distributed job.
    */
   def syncDir(spark: SparkSession, srcRoot: String, destRoot: String,
       deleteExtra: Boolean = true, parallelism: Int = 32,
-      localCopyBytes: Long = 256L << 20, localCopyFiles: Long = 100L,
+      localCopyBytes: Long = LocalCopyBytes, localCopyFiles: Long = LocalCopyFiles,
       verifyChecksum: Boolean = false): SyncStats = {
+    val conf = new Configuration()
+    val fs = new Path(destRoot).getFileSystem(conf)
+    val (t, deleted) =
+      smallTrees(conf, srcRoot, destRoot, localCopyFiles, localCopyBytes) match {
+        case Some((src, dest)) =>
+          syncLocal(fs, conf, srcRoot, destRoot, src, dest, deleteExtra, verifyChecksum)
+        case None =>
+          syncDistributed(spark, fs, conf, srcRoot, destRoot, deleteExtra,
+            parallelism, localCopyBytes, localCopyFiles, verifyChecksum)
+      }
+    // clean tmp staging dir
+    fs.delete(new Path(destRoot, ".graft-tmp"), true)
+
+    if (t.failed > 0) {
+      throw new java.io.IOException(
+        s"${t.failed} copies failed, first: ${t.firstFailure}")
+    }
+    SyncStats(t.copied, t.skipped, deleted, t.bytes)
+  }
+
+  /** Under the whole-tree bound: the same diff as the distributed join,
+    * over two driver-side maps. Returns the copy tally and the delete count. */
+  private def syncLocal(fs: FileSystem, conf: Configuration, srcRoot: String,
+      destRoot: String, src: Map[String, FileEntry], dest: Map[String, FileEntry],
+      deleteExtra: Boolean, verifyChecksum: Boolean): (Tally, Long) = {
+    val toCopy = src.values.toSeq.sortBy(_.relPath).filter(s =>
+      verifyChecksum || !dest.get(s.relPath).exists(_.size == s.size))
+    val t = tally(toCopy.map(f => copyOne(fs, conf, srcRoot, destRoot, f, verifyChecksum)))
+    val deleted =
+      if (!deleteExtra) 0L
+      else dest.keys.toSeq.sorted.filterNot(src.contains)
+        .count(rel => fs.delete(new Path(destRoot, rel), false)).toLong
+    (t, deleted)
+  }
+
+  /** Over the whole-tree bound: manifests listed and joined in Spark. */
+  private def syncDistributed(spark: SparkSession, fs: FileSystem,
+      conf: Configuration, srcRoot: String, destRoot: String,
+      deleteExtra: Boolean, parallelism: Int, localCopyBytes: Long,
+      localCopyFiles: Long, verifyChecksum: Boolean): (Tally, Long) = {
     import spark.implicits._
     val src = FsOps.listFiles(spark, srcRoot, parallelism)
     val dest = FsOps.listFiles(spark, destRoot, parallelism)
@@ -156,24 +280,15 @@ object CopyExec {
       val r = toCopy.groupBy().agg(count(lit(1)), coalesce(sum("size"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    // (copied, skipped, bytesCopied, nFailed, firstFailure). Large dirs
-    // aggregate results distributed and collect only a bounded failure
-    // sample — per-file rows never reach the driver (100-TB rule); the
-    // driver loop below the local-copy threshold is bounded by definition.
-    val (copied, skipped, bytesCopied, nFailed, firstFailure) =
-      if (nFiles == 0) (0L, 0L, 0L, 0L, "")
+    // Large dirs aggregate results distributed and collect only a bounded
+    // failure sample — per-file rows never reach the driver (100-TB rule);
+    // the driver loop below the files-to-copy bound is bounded by definition.
+    val t =
+      if (nFiles == 0) tally(Seq.empty)
       else if (nFiles < localCopyFiles && nBytes < localCopyBytes) {
-        // small dir: driver-side loop beats a distributed job (reference
-        // local-copy threshold, DistCpWrapperOptions.java:41-42)
-        val conf = new Configuration()
-        val fs = new Path(destRoot).getFileSystem(conf)
-        val rs = toCopy.collect().toSeq
-          .map(f => copyOne(fs, conf, srcRoot, destRoot, f, verifyChecksum))
-        (rs.count(_.status == "COPIED").toLong,
-          rs.count(_.status == "SKIPPED").toLong,
-          rs.filter(_.status == "COPIED").map(_.bytes).sum,
-          rs.count(_.status.startsWith("FAILED")).toLong,
-          rs.find(_.status.startsWith("FAILED")).map(_.status).getOrElse(""))
+        // few files to copy: a driver-side loop beats a distributed job
+        tally(toCopy.collect().toSeq
+          .map(f => copyOne(fs, conf, srcRoot, destRoot, f, verifyChecksum)))
       } else {
         // persist so the bounded failure-sample read doesn't re-run the
         // (idempotent but expensive) copy pass
@@ -189,7 +304,7 @@ object CopyExec {
             if (row.getLong(3) == 0) ""
             else res.filter(col("status").startsWith("FAILED"))
               .select("status").take(1).headOption.map(_.getString(0)).getOrElse("")
-          (row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3), sample)
+          Tally(row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3), sample)
         } finally {
           res.unpersist()
           ()
@@ -205,28 +320,26 @@ object CopyExec {
         val fs = new Path(destRoot).getFileSystem(conf)
         Iterator.single(it.count(rel => fs.delete(new Path(destRoot, rel), false)).toLong)
       }.agg(coalesce(sum("value"), lit(0L))).head().getLong(0)
-    // clean tmp staging dir
-    val fsDest = new Path(destRoot).getFileSystem(new Configuration())
-    fsDest.delete(new Path(destRoot, ".graft-tmp"), true)
-
-    if (nFailed > 0) {
-      throw new java.io.IOException(
-        s"$nFailed copies failed, first: $firstFailure")
-    }
-    SyncStats(copied, skipped, deleted, bytesCopied)
+    (t, deleted)
   }
 
   /** J3 equality: same visible relPaths with same sizes on both roots
-    * (reference `FsUtils.equalDirs`, `utils/common/FsUtils.java:270-381`). */
-  def equalDirs(spark: SparkSession, srcRoot: String, destRoot: String): Boolean = {
-    import spark.implicits._
-    val src = FsOps.listFiles(spark, srcRoot)
-    val dest = FsOps.listFiles(spark, destRoot)
-    val mismatches = src.as("s").joinWith(dest.as("d"),
-        col("s.relPath") === col("d.relPath"), "full_outer")
-      .filter(p => p._1 == null || p._2 == null || p._1.size != p._2.size)
-    mismatches.isEmpty
-  }
+    * (reference `FsUtils.equalDirs`, `utils/common/FsUtils.java:270-381`).
+    * Trees under the whole-tree bound compare on the driver. */
+  def equalDirs(spark: SparkSession, srcRoot: String, destRoot: String): Boolean =
+    smallTrees(new Configuration(), srcRoot, destRoot, LocalCopyFiles, LocalCopyBytes) match {
+      case Some((src, dest)) =>
+        src.size == dest.size &&
+          src.forall { case (rel, s) => dest.get(rel).exists(_.size == s.size) }
+      case None =>
+        import spark.implicits._
+        val src = FsOps.listFiles(spark, srcRoot)
+        val dest = FsOps.listFiles(spark, destRoot)
+        val mismatches = src.as("s").joinWith(dest.as("d"),
+            col("s.relPath") === col("d.relPath"), "full_outer")
+          .filter(p => p._1 == null || p._2 == null || p._1.size != p._2.size)
+        mismatches.isEmpty
+    }
 }
 
 final case class SyncStats(copied: Long, skipped: Long, deleted: Long, bytesCopied: Long)

@@ -163,26 +163,23 @@ object Tasks {
       .foldLeft(Option.empty[Vector[String]])(
         graft.planner.DiffPlanner.CommonAncestorAgg.reduce)
     val commonDir = graft.planner.DiffPlanner.CommonAncestorAgg.finish(common)
-    val bulkDone: Boolean =
-      if (commonDir.nonEmpty && parts.size > 1) {
-        // Sizing needs only two sums: never materialize the per-file
-        // manifest on the driver (at 100 TB a table's manifest is millions
-        // of rows; the reference's driver-side partition materialization is
-        // its own documented pain point).
-        val manifest = graft.fs.FsOps.listFiles(ctx.spark, commonDir)
-        val partRels = parts.map(p =>
-          p.location.stripPrefix(commonDir).stripPrefix("/"))
-        val sums = partitionSizeSums(manifest.toDF(), partRels).head()
-        val (totalBytes, partBytes) = (sums.getLong(0), sums.getLong(1))
-        if (totalBytes <= 2 * partBytes) {
-          CopyExec.syncDir(ctx.spark, commonDir, ctx.destLocation(commonDir))
-          true
-        } else false
-      } else false
+    if (commonDir.nonEmpty && parts.size > 1) {
+      // Sizing needs only two sums: never materialize the per-file
+      // manifest on the driver (at 100 TB a table's manifest is millions
+      // of rows; the reference's driver-side partition materialization is
+      // its own documented pain point).
+      val manifest = graft.fs.FsOps.listFiles(ctx.spark, commonDir)
+      val partRels = parts.map(p =>
+        p.location.stripPrefix(commonDir).stripPrefix("/"))
+      val sums = partitionSizeSums(manifest.toDF(), partRels).head()
+      val (totalBytes, partBytes) = (sums.getLong(0), sums.getLong(1))
+      if (totalBytes <= 2 * partBytes) {
+        CopyExec.syncDir(ctx.spark, commonDir, ctx.destLocation(commonDir))
+      }
+    }
     // per-partition pass: with the bulk copy done the dirs are already
     // equal, so copyPartition only commits metadata (idempotent either way)
     val outcomes = parts.map(p => copyPartition(ctx, srcTable, p))
-    val _ = bulkDone
     outcomes.collectFirst { case nc: NotCompletable => nc }.getOrElse(Done)
   }
 
