@@ -97,7 +97,7 @@ object Bench {
       // The adaptive min-of-concordant protocol below cannot reject
       // inflation that hits EVERY iteration of one query, so the compile
       // cost must be paid before timing starts — the artifact reports
-      // steady-state plans, matching BenchOne's discipline (protocol
+      // steady-state plans, like a warm single-query loop (protocol
       // change recorded in BASELINE.md round 7).
       timedRun()
       // adaptive repeats: run until the two fastest iterations agree
@@ -136,7 +136,7 @@ object Bench {
         // publish the MEDIAN of every iteration the query ran. A near-
         // baseline median = genuinely clean; a median still far over the
         // gate under an in-gate published min = one lucky iteration
-        // ended the loop — adjudicate with BenchOne before trusting it.
+        // ended the loop — re-run the query alone before trusting it.
         if (stallRetries.contains(name)) {
           val s = times.sorted
           stallMedians(name) = s(s.length / 2)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{CatalogConnector, CatalogSnapshot}
-import graft.fs.{CopyExec, FsOps}
+import graft.fs.{CopyExec, SyncUnit}
 import graft.model._
 import graft.tasks.{TaskContext, Tasks}
 
@@ -13,10 +13,10 @@ import graft.tasks.{TaskContext, Tasks}
  * 3-stage MR pipeline (`batch/hive/MetastoreReplicationJob.java:53-100`):
  *
  *   1. plan:   diff both catalog snapshots → Dataset[Action] → parquet
- *   2. data:   plan ⨝ file manifests → distributed copy
+ *   2. data:   plan's data dirs → one copy-engine run (CopyExec)
  *   3. commit: metadata ops per action against the dest catalog
  *
- * One Spark application, three jobs; `--step` resume semantics come from
+ * One Spark application, three stages; `--step` resume semantics come from
  * the persisted plan parquet (reference: `MetastoreReplicationJob.java:308-356`).
  * Blacklist filtering happens before any FS probing (early pruning, P1).
  */
@@ -82,81 +82,29 @@ object BatchReplication {
   }
 
   /**
-   * Stage 2: one global distributed copy job. The plan's COPY actions fan
-   * out to per-file rows *inside* `mapPartitions` (directory listings never
-   * touch the driver), src and dest manifests full-outer join on the dest
-   * path, and mismatching files flow into one repartitioned copy pass —
-   * the Spark translation of the reference's stage-2 MR job
-   * (`Stage2DirectoryCopyMapper.java:49-132` + reducer).
+   * Stage 2: every COPY action with data is one [[CopyExec]] unit: its
+   * source dir mirrored into its dest dir, dest-only files deleted, as the
+   * reference's stage 2 recreates each dest dir
+   * (`Stage2DirectoryCopyMapper.java:49-132` + reducer). Dirs that stay
+   * under the engine's bound together copy on the driver; otherwise one
+   * distributed plan covers all of them. Returns the number of files copied.
    */
-  def copyData(spark: SparkSession, cfg: BatchConfig): Long = {
+  def copyData(spark: SparkSession, cfg: BatchConfig): Long =
+    copyData(spark, cfg, CopyExec.DefaultBound)
+
+  private[graft] def copyData(spark: SparkSession, cfg: BatchConfig,
+      bound: CopyExec.Bound): Long = {
     import spark.implicits._
     val destOf = locationRewriter(cfg)
-    val verify = cfg.verifyChecksum
-    val dirs = spark.read.parquet(cfg.planDir).as[Action]
+    val units = spark.read.parquet(cfg.planDir).as[Action]
       .filter((a: Action) =>
         a.updateData && a.srcPath.isDefined &&
           (a.taskType == TaskType.CopyUnpartitionedTable ||
            a.taskType == TaskType.CopyPartition))
-      .map(a => (a.srcPath.get, destOf(a.srcPath.get)))
-      .filter((p: (String, String)) => p._1 != p._2)
-
-    def listUnder(pairs: Dataset[(String, String)], useSrc: Boolean) =
-      pairs.repartition(cfg.copyParallelism).mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        it.flatMap { case (srcDir, destDir) =>
-          val root = if (useSrc) srcDir else destDir
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(conf)
-          val rootUri = fs.makeQualified(p).toUri
-          FsOps.listFilesLocal(fs, p).map { case (path, len, mtime) =>
-            val rel = rootUri.relativize(new java.net.URI(path)).getPath
-            // key by absolute dest path so manifests of all dirs join at once
-            (s"$destDir/$rel", srcDir, destDir, rel, len, mtime)
-          }
-        }
-      }.toDF("destKey", "srcDir", "destDir", "relPath", "size", "mtime")
-
-    val srcManifest = listUnder(dirs, useSrc = true)
-    val destManifest = listUnder(dirs, useSrc = false)
-      .select(col("destKey"), col("size").as("destSize"))
-
-    // checksum level: size-equal files may still be corrupt, so every src
-    // file flows to the copy stage whose skip decision compares digests
-    val toCopy = srcManifest.join(destManifest, Seq("destKey"), "left_outer")
-      .filter(lit(verify) ||
-        col("destSize").isNull || col("destSize") =!= col("size"))
-      .select("srcDir", "destDir", "relPath", "size", "mtime")
-      .as[(String, String, String, Long, Long)]
-
-    // Per-file results never reach the driver: status rollup is a
-    // distributed aggregate, and only a bounded failure sample is collected
-    // (at 100 TB the result set is O(files) — a driver OOM as a collect).
-    // persist() keeps the effectful copy pass from re-running for the
-    // failure sample (copies are idempotent, but once is cheaper).
-    val results = toCopy.repartition(cfg.copyParallelism).mapPartitions { it =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      it.map { case (srcDir, destDir, rel, _, _) =>
-        val fs = new org.apache.hadoop.fs.Path(destDir).getFileSystem(conf)
-        CopyExec.copyOnePublic(fs, conf, srcDir, destDir,
-          FileEntry(srcDir, rel, 0L, 0L), verify)
-      }
-    }.persist()
-    try {
-      val row = results.agg(
-        count(when(col("status") === "COPIED", 1)),
-        count(when(col("status").startsWith("FAILED"), 1))).head()
-      val (copied, failed) = (row.getLong(0), row.getLong(1))
-      if (failed > 0) {
-        val sample = results.filter(col("status").startsWith("FAILED"))
-          .select("status").take(1).headOption.map(_.getString(0)).getOrElse("")
-        throw new java.io.IOException(s"$failed copies failed, first: $sample")
-      }
-      copied
-    } finally {
-      results.unpersist()
-      ()
-    }
+      .map(a => SyncUnit(Seq(a.srcPath.get), destOf(a.srcPath.get)))
+      .filter((u: SyncUnit) => u.srcRoots.head != u.destRoot)
+    CopyExec.execute(CopyExec.plan(units, CopyExec.AllOps, cfg.verifyChecksum,
+      cfg.copyParallelism, bound)).copied
   }
 
   private def locationRewriter(cfg: BatchConfig): String => String = {

@@ -1,10 +1,9 @@
 package graft.fs
 
-import scala.collection.mutable
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.FileEntry
@@ -13,41 +12,77 @@ import graft.model.FileEntry
   * counters, `batch/BatchUtils.java:39-132`). */
 final case class CopyResult(relPath: String, status: String, bytes: Long)
 
+final case class SyncStats(copied: Long, skipped: Long, deleted: Long, bytesCopied: Long)
+
+/** One unit of sync work: the visible files under `srcRoots` (the latest
+  * version of a relative path wins across roots) mirrored into `destRoot`. */
+private[graft] final case class SyncUnit(srcRoots: Seq[String], destRoot: String)
+
+/** One planned file operation: ADD or UPDATE copies `relPath` from
+  * `srcRoot` into `destRoot`, DELETE removes it from `destRoot`. */
+private[graft] final case class FileOp(destRoot: String, relPath: String, op: String,
+    srcRoot: String, size: Long, mtime: Long)
+
+/** Executed operations rolled up: ops run, copy outcomes, first failure. */
+private[graft] final case class Tally(added: Long = 0, updated: Long = 0, copied: Long = 0,
+    skipped: Long = 0, bytes: Long = 0, deleted: Long = 0, failed: Long = 0,
+    firstFailure: Option[String] = None) {
+  def +(o: Tally): Tally = Tally(added + o.added, updated + o.updated,
+    copied + o.copied, skipped + o.skipped, bytes + o.bytes, deleted + o.deleted,
+    failed + o.failed, firstFailure.orElse(o.firstFailure))
+}
+
+/** Planned operations: held on the driver (small trees) or in Spark. */
+private[graft] final case class SyncPlan(ops: Either[Seq[FileOp], Dataset[FileOp]],
+    verifyChecksum: Boolean, parallelism: Int)
+
 /**
- * Distributed executor-side file copy (SURVEY §2.1 S9/S10).
+ * The copy engine (SURVEY §2.1 S9/S10): list → latest wins → diff → copy →
+ * delete → tally over a set of [[SyncUnit]]s. `syncDir`, `equalDirs`,
+ * `HdfsSync` and batch stage 2 are front ends over it — the reference's
+ * three data movers (`DistCpWrapper.java:41-220`,
+ * `Stage2DirectoryCopyMapper.java:49-132`, `batch/hdfs/ReplicationJob.java:61-103`)
+ * are all this dataflow.
  *
- * Same protocol as the reference's `BatchUtils.doCopyFileAction`:
+ * The engine decides once where a plan runs. While the units together have
+ * fewer than [[LocalCopyFiles]] files per side and [[LocalCopyBytes]]
+ * source bytes, [[FsOps.listBounded]] lists them on the driver, and the
+ * diff, copies and deletes run in-process with no Spark job — the reference
+ * picks its in-process copy the same way, from the whole tree's size
+ * (`DistCpWrapper.java:117-136`). Otherwise (and without walking when there
+ * are more units than files allowed) [[FsOps.listDistributed]] lists them in
+ * Spark, a window picks the latest version per path, a full outer join
+ * diffs, and the operations run on executors; the driver sees one [[Tally]]
+ * per task, never a file row.
+ *
+ * Each copy uses the reference's `BatchUtils.doCopyFileAction` protocol:
  * skip-if-same-length, copy via a temp file, length-verify, atomic rename
- * into place, preserve mtime, 3 retries with backoff. Spark has no raw-file
- * copy operator, so this is deliberate custom `mapPartitions` code — the
- * one place imperative I/O belongs. Speculative execution must stay off for
- * copy jobs (side effects), as the reference enforces
+ * into place, preserve mtime, 3 attempts with backoff. Speculative execution
+ * must stay off for copy jobs (side effects), as the reference enforces
  * (`MetastoreReplicationJob.java:251-258`).
- *
- * Scale: the input is a `Dataset[FileEntry]`; `repartition(parallelism)`
- * spreads files round-robin (replacing the reference's murmur3(size,mtime)
- * shuffle-key balancing, `Stage2DirectoryCopyMapper.java:116-125`).
- *
- * Small trees never reach Spark: `syncDir` and `equalDirs` first list both
- * roots on the driver with a walk that stops at [[LocalCopyFiles]] files
- * per side (or [[LocalCopyBytes]] source bytes). Under that bound the diff
- * and the copies run in-process — the reference picks its in-process copy
- * the same way, from the whole tree's size (`DistCpWrapper.java:117-136`).
- * Over it, the manifests are listed and joined in Spark, so the driver
- * never holds more than ~100 rows per side.
  */
 object CopyExec {
 
   val MaxRetries = 3
 
-  /** Whole-tree bound of the driver-side path: a tree is "small" while it
-    * has fewer files and (source side) fewer bytes than these (reference
-    * local-copy threshold, `DistCpWrapperOptions.java:41-42`). */
+  /** Driver-side bound: a plan is "small" while its units have fewer files
+    * per side and fewer source bytes than these (reference local-copy
+    * threshold, `DistCpWrapperOptions.java:41-42`). */
   val LocalCopyFiles: Long = 100L
   val LocalCopyBytes: Long = 256L << 20
 
-  /** Copy one file with the full protocol (exposed for external copy
-    * pipelines like BatchReplication stage 2). */
+  private[graft] final case class Bound(files: Long, bytes: Long)
+  private[graft] val DefaultBound = Bound(LocalCopyFiles, LocalCopyBytes)
+
+  private[graft] val Add = "ADD"
+  private[graft] val Update = "UPDATE"
+  private[graft] val Delete = "DELETE"
+  private[graft] val AllOps: Set[String] = Set(Add, Update, Delete)
+  /** Internal op: clear the staging dir of a dest root after its copies. */
+  private val ClearStaging = "CLEAR_STAGING"
+  private val Staging = ".graft-tmp"
+
+  /** Copy one file with the full protocol. */
   def copyOnePublic(fs: FileSystem, conf: Configuration,
       srcRoot: String, destRoot: String, f: FileEntry,
       verifyChecksum: Boolean = false): CopyResult =
@@ -74,14 +109,14 @@ object CopyExec {
 
   private def copyOne(fs: FileSystem, conf: Configuration,
       srcRoot: String, destRoot: String, f: FileEntry,
-      verifyChecksum: Boolean = false): CopyResult = {
+      verifyChecksum: Boolean): CopyResult = {
     val src = new Path(srcRoot, f.relPath)
     val dest = new Path(destRoot, f.relPath)
     // a UUID, not the thread id: thread ids are per-JVM, so two executors
     // retrying the same file against a shared store could collide on the
     // staging name mid-write
     val tmp = new Path(destRoot,
-      s".graft-tmp/${f.relPath}.${java.util.UUID.randomUUID().toString.take(8)}")
+      s"$Staging/${f.relPath}.${java.util.UUID.randomUUID().toString.take(8)}")
     var attempt = 0
     var last: Throwable = null
     while (attempt < MaxRetries) {
@@ -128,218 +163,163 @@ object CopyExec {
     CopyResult(f.relPath, s"FAILED: ${last.getMessage}", 0L)
   }
 
-  /** Copy every manifest file from srcRoot to destRoot, distributed. */
-  def copyFiles(spark: SparkSession, manifest: Dataset[FileEntry],
-      srcRoot: String, destRoot: String, parallelism: Int = 32,
-      verifyChecksum: Boolean = false): Dataset[CopyResult] = {
+  /** Plan units the caller holds on the driver. */
+  private[graft] def plan(spark: SparkSession, units: Seq[SyncUnit], ops: Set[String],
+      verifyChecksum: Boolean, parallelism: Int, bound: Bound): SyncPlan = {
     import spark.implicits._
-    manifest.repartition(parallelism).mapPartitions { it =>
-      val conf = new Configuration()
-      val fs = new Path(destRoot).getFileSystem(conf)
-      it.map(f => copyOne(fs, conf, srcRoot, destRoot, f, verifyChecksum))
+    choose(units, spark.createDataset(units), ops, verifyChecksum, parallelism, bound)
+  }
+
+  /** Plan units held in Spark: at most `bound.files + 1` of them reach the
+    * driver, and only to decide where the plan runs. */
+  private[graft] def plan(units: Dataset[SyncUnit], ops: Set[String],
+      verifyChecksum: Boolean, parallelism: Int, bound: Bound): SyncPlan =
+    choose(units.take(math.min(bound.files, Int.MaxValue - 1L).toInt + 1).toSeq, units,
+      ops, verifyChecksum, parallelism, bound)
+
+  /** `head` holds the first units of `all`, or all of them when it is
+    * within the bound. Under the bound both sides are listed and diffed on
+    * the driver; the destinations are not walked once the sources have
+    * crossed it. Over it the plan runs in Spark. */
+  private def choose(head: Seq[SyncUnit], all: => Dataset[SyncUnit], ops: Set[String],
+      verifyChecksum: Boolean, parallelism: Int, bound: Bound): SyncPlan = {
+    val conf = new Configuration()
+    val local = for {
+      units <- Some(head).filter(_.size <= bound.files)
+      src <- FsOps.listBounded(conf, units.flatMap(_.srcRoots), bound.files, bound.bytes)
+      dest <- FsOps.listBounded(conf, units.map(_.destRoot), bound.files, Long.MaxValue)
+    } yield units.flatMap(u =>
+      diff(u.destRoot, u.srcRoots.flatMap(src), dest(u.destRoot), verifyChecksum))
+      .filter(o => ops(o.op))
+    SyncPlan(local.toLeft(planDistributed(all, ops, verifyChecksum, parallelism)),
+      verifyChecksum, parallelism)
+  }
+
+  /** One unit's diff on the driver, the same as [[planDistributed]]'s: the
+    * latest mtime wins across roots and the smaller root breaks a tie;
+    * copies in path order, then deletes. At checksum level every same-size
+    * file is an UPDATE, and its copy compares digests before it writes. */
+  private def diff(destRoot: String, src: Seq[FileEntry], dest: Seq[FileEntry],
+      verifyChecksum: Boolean): Seq[FileOp] = {
+    val latest = src.groupBy(_.relPath).values.map(_.minBy(f => (-f.mtime, f.root)))
+      .toSeq.sortBy(_.relPath)
+    val destSize = dest.map(f => f.relPath -> f.size).toMap
+    val copies = latest.flatMap { s =>
+      val op = destSize.get(s.relPath) match {
+        case None => Some(Add)
+        case Some(d) if d != s.size || verifyChecksum => Some(Update)
+        case _ => None
+      }
+      op.map(FileOp(destRoot, s.relPath, _, s.root, s.size, s.mtime))
+    }
+    val srcPaths = latest.map(_.relPath).toSet
+    copies ++ destSize.keys.toSeq.sorted.filterNot(srcPaths)
+      .map(FileOp(destRoot, _, Delete, "", 0L, 0L))
+  }
+
+  /** Over the bound: listed, ranked and joined in Spark, per unit. */
+  private def planDistributed(units: Dataset[SyncUnit], ops: Set[String],
+      verifyChecksum: Boolean, parallelism: Int): Dataset[FileOp] = {
+    import units.sparkSession.implicits._
+    val src = FsOps.listDistributed(
+      units.flatMap(u => u.srcRoots.distinct.map(r => (u.destRoot, r))), parallelism)
+    val dest = FsOps.listDistributed(units.map(u => (u.destRoot, u.destRoot)), parallelism)
+      .select(col("key"), col("relPath"), col("size").as("destSize"))
+    val w = Window.partitionBy(col("key"), col("relPath"))
+      .orderBy(col("mtime").desc, col("root"))
+    src.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .join(dest, Seq("key", "relPath"), "full_outer")
+      .select(col("key").as("destRoot"), col("relPath"),
+        when(col("size").isNull, Delete)
+          .when(col("destSize").isNull, Add)
+          .when(col("size") =!= col("destSize") || lit(verifyChecksum), Update).as("op"),
+        coalesce(col("root"), lit("")).as("srcRoot"),
+        coalesce(col("size"), lit(0L)).as("size"),
+        coalesce(col("mtime"), lit(0L)).as("mtime"))
+      .filter(col("op").isin(ops.toSeq: _*))
+      .as[FileOp]
+  }
+
+  /** Run one operation; every outcome becomes a [[Tally]]. */
+  private def exec(conf: Configuration, o: FileOp, verifyChecksum: Boolean): Tally = {
+    val fs = new Path(o.destRoot).getFileSystem(conf)
+    o.op match {
+      case Delete =>
+        Tally(deleted = if (fs.delete(new Path(o.destRoot, o.relPath), false)) 1 else 0)
+      case ClearStaging =>
+        fs.delete(new Path(o.destRoot, Staging), true)
+        Tally()
+      case op =>
+        val r = copyOne(fs, conf, o.srcRoot, o.destRoot,
+          FileEntry(o.srcRoot, o.relPath, o.size, o.mtime), verifyChecksum)
+        val failed = r.status.startsWith("FAILED")
+        Tally(added = if (op == Add) 1 else 0, updated = if (op == Update) 1 else 0,
+          copied = if (r.status == "COPIED") 1 else 0,
+          skipped = if (r.status == "SKIPPED") 1 else 0, bytes = r.bytes,
+          failed = if (failed) 1 else 0, firstFailure = Some(r.status).filter(_ => failed))
     }
   }
 
-  /** Copy outcomes rolled up: counts, copied bytes, first failure. */
-  private final case class Tally(copied: Long, skipped: Long, bytes: Long,
-      failed: Long, firstFailure: String)
-
-  private def tally(rs: Seq[CopyResult]): Tally = Tally(
-    rs.count(_.status == "COPIED").toLong,
-    rs.count(_.status == "SKIPPED").toLong,
-    rs.filter(_.status == "COPIED").map(_.bytes).sum,
-    rs.count(_.status.startsWith("FAILED")).toLong,
-    rs.find(_.status.startsWith("FAILED")).map(_.status).getOrElse(""))
-
-  /** Visible files under `root` keyed by relative path, walked on the
-    * driver — or None as soon as the walk reaches `maxFiles` files or
-    * `maxBytes` bytes. The walk is lazy (`listStatusIterator`), so a large
-    * tree costs one listing page past the bound, not a full listing. Same
-    * hidden-file rule and missing-root-is-empty rule as `FsOps.listFiles`. */
-  private def listBounded(conf: Configuration, root: String, maxFiles: Long,
-      maxBytes: Long): Option[Map[String, FileEntry]] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val out = Map.newBuilder[String, FileEntry]
-    var files = 0L
-    var bytes = 0L
-    val dirs = mutable.Stack((rootPath, ""))
-    while (dirs.nonEmpty) {
-      val (dir, prefix) = dirs.pop()
-      try {
-        val it = fs.listStatusIterator(dir)
-        while (it.hasNext) {
-          val st = it.next()
-          val name = st.getPath.getName
-          if (!FsOps.isHidden(name)) {
-            val rel = if (prefix.isEmpty) name else s"$prefix/$name"
-            if (st.isDirectory) dirs.push((st.getPath, rel))
-            else {
-              files += 1
-              bytes += st.getLen
-              if (files >= maxFiles || bytes >= maxBytes) return None
-              out += rel -> FileEntry(root, rel, st.getLen, st.getModificationTime)
-            }
-          }
-        }
-      } catch { case _: java.io.FileNotFoundException => () }
-    }
-    Some(out.result())
-  }
-
-  /** Both trees' manifests while both are under the whole-tree bound (files
-    * per side, bytes on the source), else None. The destination is not
-    * walked once the source has crossed. */
-  private def smallTrees(conf: Configuration, srcRoot: String, destRoot: String,
-      maxFiles: Long, maxBytes: Long)
-      : Option[(Map[String, FileEntry], Map[String, FileEntry])] =
-    for {
-      src <- listBounded(conf, srcRoot, maxFiles, maxBytes)
-      dest <- listBounded(conf, destRoot, maxFiles, Long.MaxValue)
-    } yield (src, dest)
+  private def clearStaging(destRoot: String) =
+    FileOp(destRoot, Staging, ClearStaging, "", 0L, 0L)
 
   /**
-   * Directory replication driver (reference `DistCpWrapper.run`,
-   * `utils/common/DistCpWrapper.java:41-220`): manifest-diff first, copy
-   * only missing/size-mismatched files, optionally delete dest-only files.
-   *
-   * Two bounds keep small work off Spark (reference local-copy threshold
-   * <256MB && <100 files, `DistCpWrapperOptions.java:41-42`):
-   *  - whole tree: while each side has fewer than `localCopyFiles` visible
-   *    files and the source fewer than `localCopyBytes` bytes, the listing,
-   *    diff, copies and deletes all run on the driver and no Spark job
-   *    starts;
-   *  - files to copy: over the tree bound the manifests are listed and
-   *    joined in Spark, and when fewer than `localCopyFiles` files and
-   *    `localCopyBytes` bytes need copying, the copies still run in a
-   *    driver loop instead of a distributed job.
+   * Run a plan: the copies first, then the deletes and the clearing of the
+   * staging dir of every dest root that had a copy. A distributed plan is
+   * persisted, so the trees are listed once for both passes. Throws when a
+   * copy failed, after the deletes and the clearing have run.
+   */
+  private[graft] def execute(p: SyncPlan): Tally = {
+    val verify = p.verifyChecksum
+    val t = p.ops match {
+      case Left(ops) =>
+        val conf = new Configuration()
+        val (deletes, copies) = ops.partition(_.op == Delete)
+        (copies ++ deletes ++ copies.map(_.destRoot).distinct.map(clearStaging))
+          .map(exec(conf, _, verify)).fold(Tally())(_ + _)
+      case Right(ops) =>
+        import ops.sparkSession.implicits._
+        def run(work: Dataset[FileOp]): Tally =
+          work.repartition(p.parallelism).mapPartitions { it =>
+            val conf = new Configuration()
+            Iterator.single(it.map(exec(conf, _, verify)).fold(Tally())(_ + _))
+          }.collect().fold(Tally())(_ + _)
+        val planned = ops.persist()
+        try {
+          val copies = planned.filter(col("op") =!= Delete)
+          // one staging clear per dest root and plan partition: no shuffle
+          val staging = copies.mapPartitions(_.map(_.destRoot).distinct.map(clearStaging))
+          run(copies) + run(planned.filter(col("op") === Delete).union(staging))
+        } finally {
+          planned.unpersist()
+          ()
+        }
+    }
+    if (t.failed > 0) throw new java.io.IOException(
+      s"${t.failed} copies failed, first: ${t.firstFailure.getOrElse("")}")
+    t
+  }
+
+  /**
+   * Directory replication (reference `DistCpWrapper.run`,
+   * `utils/common/DistCpWrapper.java:41-220`): copy only missing or
+   * size-mismatched files, optionally delete dest-only files. One unit;
+   * `localCopyFiles` and `localCopyBytes` are its driver-side bound.
    */
   def syncDir(spark: SparkSession, srcRoot: String, destRoot: String,
       deleteExtra: Boolean = true, parallelism: Int = 32,
       localCopyBytes: Long = LocalCopyBytes, localCopyFiles: Long = LocalCopyFiles,
       verifyChecksum: Boolean = false): SyncStats = {
-    val conf = new Configuration()
-    val fs = new Path(destRoot).getFileSystem(conf)
-    val (t, deleted) =
-      smallTrees(conf, srcRoot, destRoot, localCopyFiles, localCopyBytes) match {
-        case Some((src, dest)) =>
-          syncLocal(fs, conf, srcRoot, destRoot, src, dest, deleteExtra, verifyChecksum)
-        case None =>
-          syncDistributed(spark, fs, conf, srcRoot, destRoot, deleteExtra,
-            parallelism, localCopyBytes, localCopyFiles, verifyChecksum)
-      }
-    // clean tmp staging dir
-    fs.delete(new Path(destRoot, ".graft-tmp"), true)
-
-    if (t.failed > 0) {
-      throw new java.io.IOException(
-        s"${t.failed} copies failed, first: ${t.firstFailure}")
-    }
-    SyncStats(t.copied, t.skipped, deleted, t.bytes)
-  }
-
-  /** Under the whole-tree bound: the same diff as the distributed join,
-    * over two driver-side maps. Returns the copy tally and the delete count. */
-  private def syncLocal(fs: FileSystem, conf: Configuration, srcRoot: String,
-      destRoot: String, src: Map[String, FileEntry], dest: Map[String, FileEntry],
-      deleteExtra: Boolean, verifyChecksum: Boolean): (Tally, Long) = {
-    val toCopy = src.values.toSeq.sortBy(_.relPath).filter(s =>
-      verifyChecksum || !dest.get(s.relPath).exists(_.size == s.size))
-    val t = tally(toCopy.map(f => copyOne(fs, conf, srcRoot, destRoot, f, verifyChecksum)))
-    val deleted =
-      if (!deleteExtra) 0L
-      else dest.keys.toSeq.sorted.filterNot(src.contains)
-        .count(rel => fs.delete(new Path(destRoot, rel), false)).toLong
-    (t, deleted)
-  }
-
-  /** Over the whole-tree bound: manifests listed and joined in Spark. */
-  private def syncDistributed(spark: SparkSession, fs: FileSystem,
-      conf: Configuration, srcRoot: String, destRoot: String,
-      deleteExtra: Boolean, parallelism: Int, localCopyBytes: Long,
-      localCopyFiles: Long, verifyChecksum: Boolean): (Tally, Long) = {
-    import spark.implicits._
-    val src = FsOps.listFiles(spark, srcRoot, parallelism)
-    val dest = FsOps.listFiles(spark, destRoot, parallelism)
-    val joined = src.as("s").joinWith(dest.as("d"),
-      col("s.relPath") === col("d.relPath"), "full_outer")
-    // checksum level: a same-size dest file may still be corrupt, so every
-    // src file flows to the copy stage, whose skip decision compares
-    // digests (copyOne) instead of the size-only manifest diff
-    val toCopy = joined.flatMap {
-      case (s, d) if s != null &&
-        (d == null || d.size != s.size || verifyChecksum) => Some(s)
-      case _ => None
-    }
-    val extras = joined.flatMap {
-      case (s, d) if s == null => Some(d.relPath)
-      case _ => None
-    }
-
-    val (nFiles, nBytes) = {
-      val r = toCopy.groupBy().agg(count(lit(1)), coalesce(sum("size"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    // Large dirs aggregate results distributed and collect only a bounded
-    // failure sample — per-file rows never reach the driver (100-TB rule);
-    // the driver loop below the files-to-copy bound is bounded by definition.
-    val t =
-      if (nFiles == 0) tally(Seq.empty)
-      else if (nFiles < localCopyFiles && nBytes < localCopyBytes) {
-        // few files to copy: a driver-side loop beats a distributed job
-        tally(toCopy.collect().toSeq
-          .map(f => copyOne(fs, conf, srcRoot, destRoot, f, verifyChecksum)))
-      } else {
-        // persist so the bounded failure-sample read doesn't re-run the
-        // (idempotent but expensive) copy pass
-        val res = copyFiles(spark, toCopy, srcRoot, destRoot, parallelism,
-          verifyChecksum).persist()
-        try {
-          val row = res.agg(
-            count(when(col("status") === "COPIED", 1)),
-            count(when(col("status") === "SKIPPED", 1)),
-            coalesce(sum(when(col("status") === "COPIED", col("bytes"))), lit(0L)),
-            count(when(col("status").startsWith("FAILED"), 1))).head()
-          val sample =
-            if (row.getLong(3) == 0) ""
-            else res.filter(col("status").startsWith("FAILED"))
-              .select("status").take(1).headOption.map(_.getString(0)).getOrElse("")
-          Tally(row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3), sample)
-        } finally {
-          res.unpersist()
-          ()
-        }
-      }
-
-    // deletes execute where the listing lives, like the copies; the driver
-    // sees one count per partition
-    val deleted =
-      if (!deleteExtra) 0L
-      else extras.repartition(parallelism).mapPartitions { it =>
-        val conf = new Configuration()
-        val fs = new Path(destRoot).getFileSystem(conf)
-        Iterator.single(it.count(rel => fs.delete(new Path(destRoot, rel), false)).toLong)
-      }.agg(coalesce(sum("value"), lit(0L))).head().getLong(0)
-    (t, deleted)
+    val t = execute(plan(spark, Seq(SyncUnit(Seq(srcRoot), destRoot)),
+      if (deleteExtra) AllOps else Set(Add, Update), verifyChecksum, parallelism,
+      Bound(localCopyFiles, localCopyBytes)))
+    SyncStats(t.copied, t.skipped, t.deleted, t.bytes)
   }
 
   /** J3 equality: same visible relPaths with same sizes on both roots
-    * (reference `FsUtils.equalDirs`, `utils/common/FsUtils.java:270-381`).
-    * Trees under the whole-tree bound compare on the driver. */
+    * (reference `FsUtils.equalDirs`, `utils/common/FsUtils.java:270-381`),
+    * i.e. the engine plans nothing. */
   def equalDirs(spark: SparkSession, srcRoot: String, destRoot: String): Boolean =
-    smallTrees(new Configuration(), srcRoot, destRoot, LocalCopyFiles, LocalCopyBytes) match {
-      case Some((src, dest)) =>
-        src.size == dest.size &&
-          src.forall { case (rel, s) => dest.get(rel).exists(_.size == s.size) }
-      case None =>
-        import spark.implicits._
-        val src = FsOps.listFiles(spark, srcRoot)
-        val dest = FsOps.listFiles(spark, destRoot)
-        val mismatches = src.as("s").joinWith(dest.as("d"),
-            col("s.relPath") === col("d.relPath"), "full_outer")
-          .filter(p => p._1 == null || p._2 == null || p._1.size != p._2.size)
-        mismatches.isEmpty
-    }
+    plan(spark, Seq(SyncUnit(Seq(srcRoot), destRoot)), AllOps, false, 32, DefaultBound)
+      .ops.fold(_.isEmpty, _.isEmpty)
 }
-
-final case class SyncStats(copied: Long, skipped: Long, deleted: Long, bytesCopied: Long)

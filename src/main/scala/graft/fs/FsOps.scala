@@ -1,21 +1,29 @@
 package graft.fs
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.FileEntry
 
+/** One listed file, tagged with the key its root was listed for. */
+private[graft] final case class Listed(key: String, root: String, relPath: String,
+    size: Long, mtime: Long)
+
 /**
- * Distributed filesystem scan layer (SURVEY §2.1 S4/S5).
+ * The directory lister (SURVEY §2.1 S4/S5). The reference walks trees with
+ * a custom MR InputFormat (`batch/hdfs/DirScanInputFormat.java:40-180`) and
+ * a recursive lister (`utils/common/FsUtils.java:124-153`).
  *
- * Reference walks directory trees with a custom MR InputFormat
- * (`batch/hdfs/DirScanInputFormat.java:40-180`) and a recursive lister
- * (`utils/common/FsUtils.java:124-153`). Here: a short breadth-first
- * expansion on the driver to get enough directories for parallelism
- * (driver holds only directory *paths*, never file rows), then fully
- * recursive listing inside `mapPartitions` — file rows are born
- * distributed and stay distributed.
+ * Both cases share one lazy walk, so they share its rules: hidden names are
+ * skipped, and a missing root lists as empty.
+ *  - small: [[listBounded]] walks on the driver and gives up as soon as it
+ *    reaches its bound, so a large tree costs one listing page past it;
+ *  - large: [[listDistributed]] lists the first level of every root on
+ *    executors, spreads the subdirectories and walks them there. File rows
+ *    are born distributed and never reach the driver.
  */
 object FsOps {
 
@@ -24,82 +32,87 @@ object FsOps {
   def isHidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
 
-  /** Recursively list visible files under `dir` (executor-side). */
-  def listFilesLocal(fs: FileSystem, dir: Path): Iterator[(String, Long, Long)] =
-    listRecursive(fs, dir)
-
-  private def listRecursive(fs: FileSystem, dir: Path): Iterator[(String, Long, Long)] = {
-    val entries =
-      try fs.listStatus(dir).iterator
-      catch { case _: java.io.FileNotFoundException => Iterator.empty }
-    entries.filterNot(st => isHidden(st.getPath.getName)).flatMap { st =>
-      if (st.isDirectory) listRecursive(fs, st.getPath)
-      else Iterator((st.getPath.toString, st.getLen, st.getModificationTime))
-    }
+  /** Visible entries of one directory, paged lazily; a missing dir is empty. */
+  private def entries(fs: FileSystem, dir: Path): Iterator[FileStatus] = {
+    val it =
+      try fs.listStatusIterator(dir)
+      catch { case _: FileNotFoundException => return Iterator.empty }
+    new Iterator[FileStatus] {
+      def hasNext: Boolean = try it.hasNext catch { case _: FileNotFoundException => false }
+      def next(): FileStatus = it.next()
+    }.filterNot(st => isHidden(st.getPath.getName))
   }
 
-  /**
-   * Manifest of all visible files under `root`, with paths relative to it.
-   * `fanoutLevels` breadth-first levels are expanded driver-side (dir names
-   * only) so the recursive phase has `>=` targetParallelism units of work —
-   * the Spark analog of DirScanInputFormat's split generation.
-   */
-  def listFiles(spark: SparkSession, root: String,
-      targetParallelism: Int = 32, fanoutLevels: Int = 3): Dataset[FileEntry] = {
-    import spark.implicits._
-    val rootPath = new Path(root)
-    val conf = new Configuration()
-    val fs = rootPath.getFileSystem(conf)
-
-    // driver-side BFS until enough dirs (paths only; level cap like the
-    // reference's max level 3)
-    var dirs = Vector(rootPath)
-    var files = Vector.empty[(String, Long, Long)]
-    var level = 0
-    while (dirs.nonEmpty && dirs.size < targetParallelism && level < fanoutLevels) {
-      val (nextDirs, levelFiles) = dirs.flatMap { d =>
-        try fs.listStatus(d).toSeq.filterNot(st => isHidden(st.getPath.getName))
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
-      }.partition(_.isDirectory)
-      files ++= levelFiles.map(st =>
-        (st.getPath.toString, st.getLen, st.getModificationTime))
-      dirs = nextDirs.map(_.getPath)
-      level += 1
+  /** Visible files under `dir`, depth first, as (path relative to the root
+    * `dir` sits at `prefix` under, status). */
+  private def walk(fs: FileSystem, dir: Path,
+      prefix: String): Iterator[(String, FileStatus)] =
+    entries(fs, dir).flatMap { st =>
+      val rel = if (prefix.isEmpty) st.getPath.getName else s"$prefix/${st.getPath.getName}"
+      if (st.isDirectory) walk(fs, st.getPath, rel) else Iterator.single((rel, st))
     }
 
-    val rootUri = fs.makeQualified(rootPath).toUri
-    def relativize(p: String): String =
-      rootUri.relativize(new Path(p).toUri).getPath
+  /** Visible files under each of `roots`, walked on the driver — or None as
+    * soon as they reach `maxFiles` files or `maxBytes` bytes together. */
+  private[graft] def listBounded(conf: Configuration, roots: Seq[String], maxFiles: Long,
+      maxBytes: Long): Option[Map[String, Seq[FileEntry]]] = {
+    var (files, bytes) = (0L, 0L)
+    val out = Map.newBuilder[String, Seq[FileEntry]]
+    val rootIt = roots.distinct.iterator
+    while (rootIt.hasNext) {
+      val root = rootIt.next()
+      val rootPath = new Path(root)
+      val it = walk(rootPath.getFileSystem(conf), rootPath, "")
+      val listed = Seq.newBuilder[FileEntry]
+      while (it.hasNext) {
+        val (rel, st) = it.next()
+        files += 1
+        bytes += st.getLen
+        if (files >= maxFiles || bytes >= maxBytes) return None
+        listed += FileEntry(root, rel, st.getLen, st.getModificationTime)
+      }
+      out += root -> listed.result()
+    }
+    Some(out.result())
+  }
 
-    val deep: Dataset[FileEntry] =
-      if (dirs.isEmpty) spark.emptyDataset[FileEntry]
-      else spark.createDataset(dirs.map(_.toString))
-        .repartition(math.min(targetParallelism, dirs.size))
-        .mapPartitions { it =>
-          val fs2 = new Path(root).getFileSystem(new Configuration())
-          val rUri = fs2.makeQualified(new Path(root)).toUri
-          it.flatMap { d =>
-            listRecursive(fs2, new Path(d)).map { case (p, len, mtime) =>
-              FileEntry(root, rUri.relativize(new Path(p).toUri).getPath, len, mtime)
-            }
+  /** `size` of a first-level directory that still has to be walked. */
+  private val Pending = -1L
+
+  /** Visible files under every (key, root) of `roots`, listed on executors.
+    * The first level of each root is listed where the root is; its
+    * subdirectories are then spread over `parallelism` tasks and walked
+    * there — the Spark analog of DirScanInputFormat's split generation. */
+  private[graft] def listDistributed(roots: Dataset[(String, String)],
+      parallelism: Int): Dataset[Listed] = {
+    import roots.sparkSession.implicits._
+    roots.mapPartitions { it =>
+      val conf = new Configuration()
+      it.flatMap { case (key, root) =>
+        val p = new Path(root)
+        entries(p.getFileSystem(conf), p).map(st => Listed(key, root, st.getPath.getName,
+          if (st.isDirectory) Pending else st.getLen, st.getModificationTime))
+      }
+    }.repartition(parallelism).mapPartitions { it =>
+      val conf = new Configuration()
+      it.flatMap { l =>
+        if (l.size != Pending) Iterator.single(l)
+        else {
+          val dir = new Path(l.root, l.relPath)
+          walk(dir.getFileSystem(conf), dir, l.relPath).map { case (rel, st) =>
+            l.copy(relPath = rel, size = st.getLen, mtime = st.getModificationTime)
           }
         }
-
-    val shallow = spark.createDataset(files.map { case (p, len, mtime) =>
-      FileEntry(root, relativize(p), len, mtime)
-    })
-    deep.union(shallow)
+      }
+    }
   }
 
-  /** Total size + count under a root (A1/A3 rollup). */
-  def dirStats(spark: SparkSession, root: String): (Long, Long) = {
-    val m = listFiles(spark, root)
-    if (m.isEmpty) (0L, 0L)
-    else {
-      val row = m.groupBy().agg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.sum("size")).head()
-      (row.getLong(0), row.getLong(1))
-    }
+  /** Manifest of all visible files under `root`, relative to it, listed in
+    * Spark. */
+  def listFiles(spark: SparkSession, root: String,
+      targetParallelism: Int = 32): Dataset[FileEntry] = {
+    import spark.implicits._
+    listDistributed(Seq((root, root)).toDS(), targetParallelism)
+      .map(l => FileEntry(l.root, l.relPath, l.size, l.mtime))
   }
 }

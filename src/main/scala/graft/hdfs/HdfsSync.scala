@@ -1,22 +1,21 @@
 package graft.hdfs
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.fs.{CopyExec, FsOps}
+import graft.fs.{CopyExec, FileOp, SyncUnit}
 
 /**
- * Standalone multi-root HDFS directory sync — the Spark re-expression of
- * the reference's 2-stage MR job (`batch/hdfs/ReplicationJob.java:61-103`):
+ * Standalone multi-root HDFS directory sync — the reference's 2-stage MR
+ * job (`batch/hdfs/ReplicationJob.java:61-103`) as one [[CopyExec]] unit:
  *
- *   compare: union all source-root listings + dest listing, latest-mtime
- *            wins per relative path across roots (J5), size-compare vs dest
+ *   compare: all source roots + the dest listed, latest mtime wins per
+ *            relative path across roots (J5), size-compare vs dest
  *            ⇒ ADD / UPDATE / DELETE actions;
- *   sync:    execute ADD/UPDATE copies distributed, DELETE if enabled.
+ *   sync:    execute ADD/UPDATE copies, then DELETE if enabled.
  *
- * The hand-rolled argmax reducer (`:215-318`) becomes a window top-1; the
- * murmur3 rebalancing shuffle (`:322-332`) becomes `repartition`.
+ * The hand-rolled argmax reducer (`:215-318`) becomes a window top-1 (a
+ * driver-side pick under the engine's bound); the murmur3 rebalancing
+ * shuffle (`:322-332`) becomes `repartition`.
  * `dryRun` stops after compare (reference `:536-541`). Unlike the
  * reference (DELETE parsed but unexecuted, `:359`), deletes are executed
  * when enabled.
@@ -28,88 +27,38 @@ final case class HdfsSyncStats(added: Long, updated: Long, deleted: Long)
 
 object HdfsSync {
 
-  /** Stage 1 — compare: plan ADD/UPDATE/DELETE actions. */
+  /** Stage 1 — compare: plan ADD/UPDATE/DELETE actions (a dry run). */
   def plan(spark: SparkSession, srcRoots: Seq[String], destRoot: String,
       operations: Set[String] = Set("a", "u", "d"),
-      parallelism: Int = 32): Dataset[SyncAction] = {
-    import spark.implicits._
-    val srcAll = srcRoots.map(r => FsOps.listFiles(spark, r, parallelism).toDF())
-      .reduce(_ unionAll _)
-    // latest version across roots wins; root order breaks mtime ties
-    val w = Window.partitionBy(col("relPath"))
-      .orderBy(col("mtime").desc, col("root"))
-    val src = srcAll.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-      .select(col("relPath"), col("root").as("srcRoot"),
-        col("size").as("srcSize"), col("mtime").as("srcMtime"))
-    val dest = FsOps.listFiles(spark, destRoot, parallelism).toDF()
-      .select(col("relPath"), col("size").as("destSize"))
+      parallelism: Int = 32): Dataset[SyncAction] =
+    run(spark, srcRoots, destRoot, operations, dryRun = true, parallelism)._1
 
-    src.join(dest, Seq("relPath"), "full_outer")
-      .select(col("relPath"),
-        when(col("destSize").isNull && col("srcSize").isNotNull, "ADD")
-          .when(col("srcSize").isNull, "DELETE")
-          .when(col("srcSize") =!= col("destSize"), "UPDATE")
-          .otherwise("NOOP").as("op"),
-        coalesce(col("srcRoot"), lit("")).as("srcRoot"),
-        coalesce(col("srcSize"), lit(0L)).as("size"),
-        coalesce(col("srcMtime"), lit(0L)).as("mtime"))
-      .as[SyncAction]
-      .filter((a: SyncAction) => a.op != "NOOP" &&
-        operations.contains(a.op.substring(0, 1).toLowerCase))
-  }
-
-  /** Stage 2 — sync: execute the planned actions. */
+  /**
+   * Stage 2 — sync: plan once, then execute the planned actions.
+   *
+   * The returned actions are the plan. Under the driver-side bound they are
+   * the very actions this call executed, held as a local Dataset. Over it
+   * they stay lazy: evaluating them lists the trees again, so after a run
+   * they show what is still left to do (nothing, once converged). A dry run
+   * returns the plan without touching the dest.
+   */
   def run(spark: SparkSession, srcRoots: Seq[String], destRoot: String,
       operations: Set[String] = Set("a", "u", "d"), dryRun: Boolean = false,
-      parallelism: Int = 32): (Dataset[SyncAction], Option[HdfsSyncStats]) = {
+      parallelism: Int = 32): (Dataset[SyncAction], Option[HdfsSyncStats]) =
+    run(spark, srcRoots, destRoot, operations, dryRun, parallelism, CopyExec.DefaultBound)
+
+  private[graft] def run(spark: SparkSession, srcRoots: Seq[String], destRoot: String,
+      operations: Set[String], dryRun: Boolean, parallelism: Int,
+      bound: CopyExec.Bound): (Dataset[SyncAction], Option[HdfsSyncStats]) = {
     import spark.implicits._
-    val actions = plan(spark, srcRoots, destRoot, operations, parallelism)
-    if (dryRun) return (actions, None)
-
-    // Copies and deletes both execute on executors; the driver sees only
-    // the per-op rollup plus a bounded failure sample — never O(files) rows
-    // (the reference's stage-2 reducers, `HdfsSyncReducer`).
-    val copies = actions.filter((a: SyncAction) => a.op == "ADD" || a.op == "UPDATE")
-      .repartition(parallelism)
-      .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val fs = new org.apache.hadoop.fs.Path(destRoot).getFileSystem(conf)
-        it.map { a =>
-          (a.op, CopyExec.copyOnePublic(fs, conf, a.srcRoot, destRoot,
-            graft.model.FileEntry(a.srcRoot, a.relPath, a.size, a.mtime)).status)
-        }
-      }.toDF("op", "status").persist()
-    val (added, updated, nFailed, firstFailure) =
-      try {
-        val row = copies.agg(
-          count(when(col("op") === "ADD", 1)),
-          count(when(col("op") === "UPDATE", 1)),
-          count(when(col("status").startsWith("FAILED"), 1))).head()
-        val sample =
-          if (row.getLong(2) == 0) ""
-          else copies.filter(col("status").startsWith("FAILED"))
-            .select("status").take(1).headOption.map(_.getString(0)).getOrElse("")
-        (row.getLong(0), row.getLong(1), row.getLong(2), sample)
-      } finally {
-        copies.unpersist()
-        ()
-      }
-
-    val deleted = actions.filter((a: SyncAction) => a.op == "DELETE")
-      .repartition(parallelism)
-      .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val fs = new org.apache.hadoop.fs.Path(destRoot).getFileSystem(conf)
-        Iterator.single(it.count(a => fs.delete(
-          new org.apache.hadoop.fs.Path(destRoot, a.relPath), false)).toLong)
-      }.agg(coalesce(sum("value"), lit(0L))).head().getLong(0)
-    new org.apache.hadoop.fs.Path(destRoot)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-      .delete(new org.apache.hadoop.fs.Path(destRoot, ".graft-tmp"), true)
-
-    if (nFailed > 0) throw new java.io.IOException(
-      s"$nFailed copies failed: $firstFailure")
-    (actions, Some(HdfsSyncStats(added, updated, deleted)))
+    val p = CopyExec.plan(spark, Seq(SyncUnit(srcRoots, destRoot)),
+      CopyExec.AllOps.filter(op => operations(op.take(1).toLowerCase)), false,
+      parallelism, bound)
+    val stats = Option.when(!dryRun) {
+      val t = CopyExec.execute(p)
+      HdfsSyncStats(t.added, t.updated, t.deleted)
+    }
+    def action(o: FileOp) = SyncAction(o.relPath, o.op, o.srcRoot, o.size, o.mtime)
+    (p.ops.fold(_.map(action).toDS(), _.map(action)), stats)
   }
 }

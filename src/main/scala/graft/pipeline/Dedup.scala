@@ -494,19 +494,9 @@ object Dedup {
     containmentLshImpl(docs, threshold, k, idCol, textCol, bucketCap,
       parityHash, isNew = Some(isNew))
 
-  /** Candidate stage of [[containmentLshImpl]] exposed for profiling
-    * (ContainmentProbe): the banded join BEFORE exact verification. */
-  private[graft] def containmentLshCandidates(docs: DataFrame,
-      threshold: Double, k: Int = 16, idCol: String = "doc_id",
-      textCol: String = "text",
-      bucketCap: Option[Int] = Some(256)): DataFrame =
-    containmentLshImpl(docs, threshold, k, idCol, textCol, bucketCap,
-      parityHash = false, isNew = None, candidatesOnly = true)
-
   private def containmentLshImpl(docs: DataFrame, threshold: Double, k: Int,
       idCol: String, textCol: String, bucketCap: Option[Int],
-      parityHash: Boolean, isNew: Option[Column => Column],
-      candidatesOnly: Boolean = false): DataFrame = {
+      parityHash: Boolean, isNew: Option[Column => Column]): DataFrame = {
     require(k > 0 && (k & (k - 1)) == 0, s"k must be a power of two, got $k")
     val spark = docs.sparkSession
     // `size(toks) > 0` only ever drops NULL-text rows (split of any
@@ -537,9 +527,9 @@ object Dedup {
     // int per doc. The full token arrays are corpus-sized; pinning them in
     // the session-lifetime cache registry would hold ~the whole corpus in
     // block storage between calls. Tokens are recomputed (one extra scan
-    // per verify side) for the exact-verify join instead — profiled
-    // (tools/ContainmentProbe): tokenize+sort is 0.3 s of the ~8 s query
-    // at sf0.1, and a MEMORY_AND_DISK_SER token cache measured ZERO
+    // per verify side) for the exact-verify join instead — profiled at
+    // sf0.1: tokenize+sort is 0.3 s of the ~8 s query, and a
+    // MEMORY_AND_DISK_SER token cache measured ZERO
     // speedup; the banded candidate join dominates (7.9 s of 8.6,
     // 840k candidates from 5k docs), so the memory-safe recompute stays.
     // spread BEFORE the k-hash signature pass: it is the query's densest
@@ -620,7 +610,6 @@ object Dedup {
             greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
           .distinct()
     }
-    if (candidatesOnly) return cand
     val t = toksDf
     // same width pin for the exact-verify join: candidate pairs are a
     // few MB of ids, but each row costs a full sorted-merge intersect

@@ -151,7 +151,7 @@ object Semantic {
     * persisted-index path in [[Similarity]]) switches from literal
     * expressions to the broadcast-join assignment. The default (2¹²)
     * keeps the whole assignment inside COMPILED codegen — a 16k-literal
-    * tree was measured (ScaleProbe `large_k_index`) to blow janino's
+    * tree was measured (a 10× hashed-vector index build) to blow janino's
     * 64 KB method limit and silently fall back to interpreted eval,
     * so the literal path's speed advantage is already gone well before
     * plan construction itself fails at 10⁷⁺ literals. Raise/lower per

@@ -210,8 +210,8 @@ object PipelineQueries15 {
     // that full-replay oracle. At THIS corpus/batch ratio (batch =
     // 20% of a 5k-doc corpus) the frame-based join is cheaper — the
     // index's writes dominate; the index wins where it matters: a
-    // fixed batch against a growing corpus (ScaleProbe ssj_admit:
-    // ratio 1.27 at 10× corpus, where the frame-based path grows
+    // fixed batch against a growing corpus (measured: the same batch
+    // costs 1.27× at a 10× corpus, where the frame-based path grows
     // with the corpus).
     QueryDef("dedup_setjoin_admit",
       PipelineQueries15.setjoinIncrementalSql) { (s, dir) =>

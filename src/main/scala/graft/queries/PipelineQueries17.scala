@@ -172,7 +172,8 @@ object PipelineQueries17 {
     // (same candidate semantics, same verify), so it shares that
     // full-replay oracle; unlike the frame-based path, NOTHING here
     // re-reads or re-signs old text — the property that holds at
-    // 100 TB (ScaleProbe lsh_admit pins the flat-batch ratio).
+    // 100 TB (measured: a fixed batch costs about the same at a 10×
+    // corpus).
     QueryDef("dedup_lshidx_admit", PipelineQueries17.lshIncrementalSql) {
       (s, dir) =>
       import org.apache.spark.sql.functions.col

@@ -11,7 +11,7 @@ package graft.queries
  *
  * Encoding XXH64 in SQL needs three care points, all validated against a
  * ground-truth dump of Spark's own implementation (130k hashes, 0
- * mismatches — see `DevXxhDump`):
+ * mismatches):
  *
  *  - '''Wrapping 64-bit arithmetic.''' DuckDB BIGINT overflow throws, so
  *    the running hash lives in an unsigned HUGEINT in [0, 2^64). Products

@@ -230,9 +230,9 @@ object WarehouseSim {
   def urlDocs(spark: SparkSession, sfDir: String): DataFrame =
     read(spark, sfDir, "documents").select(col("doc_id"), urlColumn)
 
-  /** The 4-variant URL expression over a `doc_id` column — shared by
-    * [[urlDocs]] and ScaleProbe so the probed shape cannot drift from
-    * the certified one. */
+  /** The 4-variant URL expression over a `doc_id` column, kept apart
+    * from [[urlDocs]] so a scaled-up corpus can reuse the certified
+    * shape. */
   def urlColumn: Column = {
     val b = expr("doc_id div 4").cast("string")
     val site = expr("(doc_id div 4) % 50").cast("string")

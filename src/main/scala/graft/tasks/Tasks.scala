@@ -10,7 +10,7 @@ import graft.model._
  * The task layer (SURVEY §2.10 T1-T10): effectful execution of one plan
  * row against the destination catalog + filesystem, with the reference's
  * idempotency machinery — TLDT optimistic-concurrency guards on destructive
- * ops, conflict handling, copy-skip on directory equality.
+ * ops, conflict handling, and directory syncs that copy only what differs.
  *
  * Reference: the task classes under `incremental/primitives/`. Every task is safe to
  * re-run (equality checks + guards), which is what makes Spark task
@@ -89,8 +89,8 @@ object Tasks {
       }
     }
 
-  /** T1 — copy an unpartitioned table: guards → conflict → dir copy
-    * (skipped when already equal) → metadata commit
+  /** T1 — copy an unpartitioned table: guards → conflict → dir sync
+    * (copies nothing when already equal) → metadata commit
     * (`CopyUnpartitionedTableTask.java:82-201`). */
   def copyUnpartitionedTable(ctx: TaskContext, src: TableMeta): Outcome = {
     if (src.isPartitioned) return NotCompletable("table is partitioned")
@@ -99,10 +99,7 @@ object Tasks {
           .exists(_.lastModified > src.lastModified)) return DestNewer
     resolveConflict(ctx, src)
     val destLoc = ctx.destLocation(src.location)
-    if (destLoc != src.location &&
-        !CopyExec.equalDirs(ctx.spark, src.location, destLoc)) {
-      CopyExec.syncDir(ctx.spark, src.location, destLoc)
-    }
+    if (destLoc != src.location) CopyExec.syncDir(ctx.spark, src.location, destLoc)
     commitTable(ctx, src)
     Done
   }
@@ -125,7 +122,7 @@ object Tasks {
   }
 
   /** T3 — copy one partition: parent table must exist (else T2 first),
-    * equality-check-then-copy, add/alter partition
+    * dir sync (copies nothing when already equal), add/alter partition
     * (`CopyPartitionTask.java:98-263`). */
   def copyPartition(ctx: TaskContext, srcTable: TableMeta,
       src: PartitionMeta): Outcome = {
@@ -136,10 +133,7 @@ object Tasks {
       copyPartitionedTable(ctx, srcTable)
     }
     val destLoc = ctx.destLocation(src.location)
-    if (destLoc != src.location &&
-        !CopyExec.equalDirs(ctx.spark, src.location, destLoc)) {
-      CopyExec.syncDir(ctx.spark, src.location, destLoc)
-    }
+    if (destLoc != src.location) CopyExec.syncDir(ctx.spark, src.location, destLoc)
     val dest = destPartitionMeta(ctx, src)
     ctx.destCatalog.getPartition(src.db, src.table, src.partName) match {
       case None => ctx.destCatalog.addPartition(dest)
@@ -153,8 +147,8 @@ object Tasks {
    * rewrite (`CopyPartitionsTask.java:137-283`): when every partition lives
    * under one common ancestor and that directory isn't more than 2× the
    * partitions' own bytes, ONE directory sync replaces N per-partition
-   * copies; the per-partition step then just verifies (equalDirs) and
-   * commits metadata. Sizes come from a single manifest listing, not N.
+   * copies; the per-partition step's sync then finds nothing to copy and
+   * it commits metadata. Sizes come from a single manifest listing, not N.
    */
   def copyPartitions(ctx: TaskContext, srcTable: TableMeta,
       parts: Seq[PartitionMeta]): Outcome = {

@@ -73,6 +73,39 @@ class BatchReplicationSpec extends TestBase {
     assert(dest.getTable("test_db", "unp_table").isEmpty)
   }
 
+  test("a rewritten partition with one fewer file converges, " +
+      "and no staging dir is left") {
+    val srcWh = tmpDir("shrink-src-wh")
+    val destWh = tmpDir("shrink-dest-wh")
+    val srcConn = freshCatalog("shrink-src")
+    val destConn = freshCatalog("shrink-dest")
+    val src = srcConn.connect()
+    val part = partitionedTable("db1", "t", srcWh)
+    src.createTable(part)
+    Seq("ds=1/hr=1", "ds=1/hr=2").foreach(p => src.addPartition(partition(part, p)))
+    src.createTable(unpartitionedTable("db1", "u", srcWh))
+    val cfg = BatchConfig(srcConn, destConn,
+      srcFsRoot = srcWh.toUri.toString.stripSuffix("/"),
+      destFsRoot = destWh.toUri.toString.stripSuffix("/"),
+      planDir = tmpDir("shrink-plan").toUri.toString + "plan",
+      copyParallelism = 4)
+    BatchReplication.run(spark, cfg)
+
+    // the partition is rewritten without file2.txt, with a newer tldt
+    val rewritten = partition(part, "ds=1/hr=2", tldt = 2000L)
+    java.nio.file.Files.delete(srcWh.resolve("db1/t/ds=1/hr=2/file2.txt"))
+    src.alterPartition(rewritten)
+    val stats = BatchReplication.run(spark, cfg)
+    assert(stats.commitFailures == 0)
+
+    val destPart = destConn.connect().getPartition("db1", "t", "ds=1/hr=2").get
+    assert(CopyExec.equalDirs(spark, rewritten.location, destPart.location))
+    assert(!java.nio.file.Files.exists(destWh.resolve("db1/t/ds=1/hr=2/file2.txt")))
+    val staging = java.nio.file.Files.walk(destWh)
+    try assert(!staging.anyMatch(_.getFileName.toString == ".graft-tmp"))
+    finally staging.close()
+  }
+
   test("blacklist prunes before planning") {
     val srcWh = tmpDir("bl-src-wh")
     val srcConn = freshCatalog("bl-src")

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -8,8 +9,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
+import graft.batch.{BatchConfig, BatchReplication}
 import graft.fs.{CopyExec, FsOps, SyncStats}
-import graft.model.FileEntry
+import graft.hdfs.{HdfsSync, HdfsSyncStats}
+import graft.model.{Action, FileEntry, TaskType}
 import graft.tasks.{TaskContext, Tasks}
 
 /** Filesystem layer: listing (hidden-file filter, deep trees), sync copy
@@ -266,5 +269,157 @@ class FsCopySpec extends TestBase {
     val (bigEqual, bigEqJobs) = jobsStartedBy(
       CopyExec.equalDirs(spark, big.toUri.toString, bigDest.toUri.toString))
     assert(bigEqual && bigEqJobs > 0, s"equalDirs: $bigEqual after $bigEqJobs jobs")
+  }
+
+  /** Writes `content` at `rel` under `root` with the given mtime. */
+  private def put(root: Path, rel: String, content: String, mtime: Long): Unit = {
+    val f = root.resolve(rel)
+    writeFile(f.getParent, f.getFileName.toString, content)
+    Files.setLastModifiedTime(f, FileTime.fromMillis(mtime))
+  }
+
+  /** Three source roots r0..r2 and a dest that exercise every HdfsSync
+    * branch: a path whose latest version is in another root, an mtime tie
+    * between r1 and r2 (the smaller root, r1, wins), adds, a size update, an
+    * equal file, a dest-only file and hidden entries. With `pad`, r0 and the
+    * dest share [[PadFiles]] equal files, so the sources cross the bound. */
+  private def multiRootFixture(name: String, pad: Boolean): (Seq[String], Path) = {
+    val base = tmpDir(s"$name-roots")
+    val roots = (0 until 3).map(i => base.resolve(s"r$i"))
+    val dest = tmpDir(s"$name-dest")
+    val t0 = 1700000000000L
+    put(roots(0), "both.txt", "old-version!", t0)
+    put(roots(2), "both.txt", "newer", t0 + 60000)
+    put(roots(1), "tie/t.txt", "from-r1", t0)
+    put(roots(2), "tie/t.txt", "from-r2-longer", t0)
+    put(roots(0), "only0.txt", "zero", t0)
+    put(roots(2), "d/only2.txt", "two", t0)
+    put(roots(1), "upd.txt", "updated-content", t0)
+    put(dest, "upd.txt", "stale", t0)
+    put(roots(0), "same.txt", "same", t0)
+    put(dest, "same.txt", "same", t0)
+    put(dest, "gone/extra.txt", "goes-away", t0)
+    put(roots(1), "_SUCCESS", "", t0)
+    put(dest, ".staging/f.txt", "keep", t0)
+    if (pad) (0 until PadFiles).foreach { i =>
+      put(roots(0), s"pad/p${i % 4}/f$i.txt", "x" * (i % 9), t0)
+      put(dest, s"pad/p${i % 4}/f$i.txt", "x" * (i % 9), t0)
+    }
+    (roots.map(_.toUri.toString), dest)
+  }
+
+  test("HdfsSync: driver-side and distributed runs agree, mtime ties included") {
+    val onDriver = CopyExec.Bound(Long.MaxValue, Long.MaxValue)
+    Seq((Set("a", "u", "d"), HdfsSyncStats(added = 4, updated = 1, deleted = 1)),
+        (Set("a"), HdfsSyncStats(added = 4, updated = 0, deleted = 0))).foreach {
+      case (ops, expected) =>
+        val name = ops.toSeq.sorted.mkString
+        def run(fx: (Seq[String], Path), bound: CopyExec.Bound, dryRun: Boolean) =
+          jobsStartedBy(HdfsSync.run(spark, fx._1, fx._2.toUri.toString, ops, dryRun,
+            4, bound))
+        // the same padded fixture twice: the default bound sends it to
+        // Spark, a raised one keeps it on the driver
+        val (fd, fl) = (multiRootFixture(s"hp-$name-dist", pad = true),
+          multiRootFixture(s"hp-$name-local", pad = true))
+        def plan(fx: (Seq[String], Path), bound: CopyExec.Bound) = {
+          val ((actions, stats), jobs) = run(fx, bound, dryRun = true)
+          assert(stats.isEmpty)
+          (actions.collect().toSeq.map(a => a.copy(srcRoot =
+            a.srcRoot.stripSuffix("/").split('/').last)).sortBy(_.relPath), jobs)
+        }
+        val (distPlan, _) = plan(fd, CopyExec.DefaultBound)
+        val (localPlan, localPlanJobs) = plan(fl, onDriver)
+        assert(localPlanJobs == 0, s"$name: dry run started $localPlanJobs jobs")
+        assert(distPlan == localPlan, s"$name: plans differ")
+        assert(localPlan.filter(_.relPath == "tie/t.txt").map(a => (a.op, a.srcRoot)) ==
+          Seq(("ADD", "r1")), s"$name: $localPlan")
+
+        val ((_, dist), distJobs) = run(fd, CopyExec.DefaultBound, dryRun = false)
+        val ((_, local), localJobs) = run(fl, onDriver, dryRun = false)
+        assert(distJobs > 0, s"$name: sources over the bound must run distributed")
+        assert(localJobs == 0, s"$name: $localJobs jobs on the driver path")
+        assert(dist.contains(expected), s"$name: distributed $dist")
+        assert(local.contains(expected), s"$name: driver-side $local")
+        assert(tree(fd._2) == tree(fl._2), s"$name: destination trees differ")
+        val dest = fd._2
+        assert(Files.readString(dest.resolve("tie/t.txt")) == "from-r1")
+        assert(Files.readString(dest.resolve("both.txt")) == "newer")
+        assert(Files.readString(dest.resolve("upd.txt")) ==
+          (if (ops("u")) "updated-content" else "stale"))
+        assert(Files.exists(dest.resolve("gone/extra.txt")) == !ops("d"))
+        assert(Files.exists(dest.resolve(".staging/f.txt")))
+        assert(!Files.exists(dest.resolve(".graft-tmp")))
+        assert(!Files.exists(dest.resolve("_SUCCESS")))
+    }
+  }
+
+  test("HdfsSync.run on a small tree starts zero Spark jobs") {
+    val (roots, dest) = multiRootFixture("hp-small", pad = false)
+    val ((actions, stats), jobs) = jobsStartedBy(
+      HdfsSync.run(spark, roots, dest.toUri.toString, parallelism = 4))
+    assert(jobs == 0, s"HdfsSync.run started $jobs Spark jobs")
+    assert(stats.contains(HdfsSyncStats(added = 4, updated = 1, deleted = 1)))
+    // the returned actions are the ones the run executed
+    assert(actions.collect().map(_.op).sorted.toSeq ==
+      Seq("ADD", "ADD", "ADD", "ADD", "DELETE", "UPDATE"))
+    assert(!Files.exists(dest.resolve(".graft-tmp")))
+  }
+
+  /** Four partition dirs of one table; in each, the dest has an equal file,
+    * a size-changed file and a dest-only file, and lacks an added one. The
+    * plan parquet lists the four dirs as CopyPartition actions. With `pad`,
+    * the dirs share [[PadFiles]] equal files, over the bound. */
+  private def batchFixture(name: String, pad: Boolean): (BatchConfig, Path) = {
+    import spark.implicits._
+    val srcWh = tmpDir(s"$name-src-wh")
+    val destWh = tmpDir(s"$name-dest-wh")
+    val parts = (1 to 4).map(i => s"db/t/ds=$i")
+    parts.zipWithIndex.foreach { case (p, i) =>
+      writeFile(srcWh.resolve(p), "same.txt", "same")
+      writeFile(destWh.resolve(p), "same.txt", "same")
+      writeFile(srcWh.resolve(p), "changed.txt", "new-content" * (i + 1))
+      writeFile(destWh.resolve(p), "changed.txt", "old")
+      writeFile(srcWh.resolve(p), s"added$i.txt", "fresh")
+      writeFile(destWh.resolve(p), "extra.txt", "goes-away")
+      writeFile(srcWh.resolve(p), "_SUCCESS", "")
+    }
+    if (pad) (0 until PadFiles).foreach { i =>
+      writeFile(srcWh.resolve(parts(i % 4)), s"f$i.txt", "x" * (i % 9))
+      writeFile(destWh.resolve(parts(i % 4)), s"f$i.txt", "x" * (i % 9))
+    }
+    val cfg = BatchConfig(freshCatalog(s"$name-src"), freshCatalog(s"$name-dest"),
+      srcWh.toUri.toString.stripSuffix("/"), destWh.toUri.toString.stripSuffix("/"),
+      planDir = tmpDir(s"$name-plan").toUri.toString + "plan", copyParallelism = 4)
+    parts.map(p => Action(TaskType.CopyPartition, "db", "t", Some(p.stripPrefix("db/t/")),
+        updateMetadata = true, updateData = true, Some(s"${cfg.srcFsRoot}/$p"), None))
+      .toDS().write.parquet(cfg.planDir)
+    (cfg, destWh)
+  }
+
+  test("copyData: driver-side and distributed runs agree over several dirs") {
+    val (cd, dd) = batchFixture("cp-dist", pad = true)
+    val (cl, dl) = batchFixture("cp-local", pad = true)
+    val (cu, du) = batchFixture("cp-units", pad = false)
+    val (cs, ds) = batchFixture("cp-small", pad = false)
+    val (dist, distJobs) = jobsStartedBy(
+      BatchReplication.copyData(spark, cd, CopyExec.DefaultBound))
+    val (local, localJobs) = jobsStartedBy(
+      BatchReplication.copyData(spark, cl, CopyExec.Bound(Long.MaxValue, Long.MaxValue)))
+    // more dirs than the bound allows files: distributed without a walk
+    val (units, unitJobs) = jobsStartedBy(
+      BatchReplication.copyData(spark, cu, CopyExec.Bound(3, Long.MaxValue)))
+    val (small, smallJobs) = jobsStartedBy(BatchReplication.copyData(spark, cs))
+    assert(Seq(dist, local, units, small) == Seq(8L, 8L, 8L, 8L))
+    // the driver-side runs start only the jobs that read the plan parquet
+    assert(localJobs < distJobs && smallJobs < unitJobs,
+      s"jobs: distributed $distJobs / $unitJobs, driver-side $localJobs / $smallJobs")
+    assert(tree(dd) == tree(dl), "padded destination trees differ")
+    assert(tree(du) == tree(ds), "small destination trees differ")
+    (1 to 4).foreach { i =>
+      val dir = dd.resolve(s"db/t/ds=$i")
+      assert(!Files.exists(dir.resolve("extra.txt")))
+      assert(!Files.exists(dir.resolve(".graft-tmp")))
+      assert(Files.readString(dir.resolve("changed.txt")) == "new-content" * i)
+    }
   }
 }
