@@ -1,5 +1,7 @@
 package graft.fs
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -121,6 +123,8 @@ object CopyExec {
     var last: Throwable = null
     while (attempt < MaxRetries) {
       try {
+        // back off between attempts only: a final failure returns at once
+        if (attempt > 0) Thread.sleep(math.min(1000L << attempt, 8000L))
         val srcStatus = fs.getFileStatus(src)
         if (fs.exists(dest) && fs.getFileStatus(dest).getLen == srcStatus.getLen &&
             (!verifyChecksum ||
@@ -150,11 +154,13 @@ object CopyExec {
         fs.setTimes(dest, srcStatus.getModificationTime, -1)
         return CopyResult(f.relPath, "COPIED", srcStatus.getLen)
       } catch {
-        case e: Throwable =>
+        // an interrupt (a cancelled task) ends the copy, flag kept set
+        case e: InterruptedException =>
+          Thread.currentThread().interrupt()
+          throw e
+        case NonFatal(e) =>
           last = e
           attempt += 1
-          // back off between attempts only: a final failure returns at once
-          if (attempt < MaxRetries) Thread.sleep(math.min(1000L << attempt, 8000L))
       }
     }
     // best-effort staging cleanup: the UUID name is unique to this call,

@@ -13,10 +13,14 @@ import graft.tasks.{TaskContext, Tasks}
  *
  * Per micro-batch (`foreachBatch`), preserving the reference's
  * exactly-once-ish ordering (`ReplicationServer.java:460-504`):
- *   1. plan jobs from the audit entries (pure transform, [[JobFactory]]);
- *   2. persist them PENDING to the state table *before* execution;
+ *   1. collect the page and plan its jobs on the driver ([[JobFactory]]);
+ *   2. persist them PENDING to the state log *before* execution;
  *   3. execute with per-key lock ordering ([[LockExecutor]], 20 workers);
  *   4. persist terminal statuses; advance the watermark last.
+ * Steps 1, 2 and 4 start no Spark job: the state log ([[StateStore]]) is
+ * written as driver-side files, as the reference plans in plain Java and
+ * updates its job rows in place. Spark reads the audit stream and the
+ * state log, and runs the copies that are too big for the driver.
  *
  * Replay after crash re-runs PENDING/RUNNING jobs; tasks are idempotent
  * (equality checks + TLDT guards), so replay is safe — the reference's
@@ -127,7 +131,7 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
           case _ => None
         }).getOrElse(Tasks.NotCompletable("rename partition spec missing"))
       case TaskType.NoOp =>
-        // planJobs routes unparseable commands here so they surface as
+        // JobFactory routes unparseable commands here so they surface as
         // NOT_COMPLETABLE rows instead of silently vanishing
         Tasks.NotCompletable(
           s"unparseable command: ${j.extras.getOrElse("command", "")}")
@@ -173,25 +177,28 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
   }
 
   /** One micro-batch: plan → persist ALL jobs PENDING → execute in chunks
-    * of maxJobsPerBatch → persist statuses → watermark. Every planned job
-    * is persisted before the watermark advances — the cap only bounds how
-    * many are *in flight* at once (the reference pauses ingestion at
-    * maxJobsInMemory rather than discarding, `ReplicationServer.java:427-439`);
-    * a crash mid-batch leaves the tail PENDING for recover() to replay. */
-  def processBatch(entries: Dataset[AuditLogEntry]): Seq[(JobState, String)] = {
+    * of maxJobsPerBatch → persist statuses → watermark. The page is
+    * collected to the driver, so it must be bounded: the streaming sources
+    * admit at most maxJobsPerBatch entries per trigger and a JDBC poll
+    * reads one page. Every planned job is persisted before the watermark
+    * advances — the cap only bounds how many are *in flight* at once
+    * (the reference pauses ingestion at maxJobsInMemory rather than
+    * discarding, `ReplicationServer.java:427-439`); a crash mid-batch
+    * leaves the tail PENDING for recover() to replay. */
+  def processBatch(entries: Dataset[AuditLogEntry]): Seq[(JobState, String)] =
+    processPage(entries.collect().toSeq)
+
+  private def processPage(entries: Seq[AuditLogEntry]): Seq[(JobState, String)] = {
     // Global id sort before chunking: LockExecutor orders same-key jobs only
-    // within a chunk, so an unsorted collect could split a DROP and a later
+    // within a chunk, so an unsorted page could split a DROP and a later
     // COPY of one table across chunks out of order (ST4/ST5 guarantee).
-    val jobs = JobFactory.planJobs(spark, entries, cfg.filters)
-      .collect().toSeq.sortBy(_.id)
+    val jobs = JobFactory.plan(entries, cfg.filters).sortBy(_.id)
     if (jobs.isEmpty) return Seq.empty
     state.append(jobs) // PENDING before execution (ST2 ordering)
     val results = jobs.grouped(math.max(1, cfg.maxJobsPerBatch)).flatMap {
       chunk =>
         val rs = LockExecutor.execute(chunk, cfg.workers, cfg.drainTimeoutMillis)(runJobWithRetry)
-        state.append(rs.map { case (j, s) =>
-          j.copy(status = if (s.startsWith("FAILED")) JobStatus.Failed else s)
-        })
+        state.append(rs.map(finalState))
         rs
     }.toSeq
     watermark.set(jobs.map(_.id).max)
@@ -212,10 +219,20 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
     val runnable = state.restoreRunnable()
     if (runnable.isEmpty) return Seq.empty
     val results = LockExecutor.execute(runnable, cfg.workers, cfg.drainTimeoutMillis)(runJobWithRetry)
-    state.append(results.map { case (j, s) =>
-      j.copy(status = if (s.startsWith("FAILED")) JobStatus.Failed else s)
-    })
+    state.append(results.map(finalState))
     results
+  }
+
+  /** The transition persisted for an executed job. LockExecutor reports a
+    * thrown job as `FAILED: <exception>`; the row keeps that exception (its
+    * class and message) in `extras("error")`, cut to
+    * [[IncrementalServer.MaxErrorChars]]. */
+  private def finalState(r: (JobState, String)): JobState = r match {
+    case (j, s) if s.startsWith(JobStatus.Failed) =>
+      j.copy(status = JobStatus.Failed, extras = j.extras +
+        ("error" -> s.stripPrefix(JobStatus.Failed).stripPrefix(": ")
+          .take(IncrementalServer.MaxErrorChars)))
+    case (j, s) => j.copy(status = s)
   }
 
   /** One JDBC poll: read the next id-keyed page after the watermark,
@@ -224,11 +241,10 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
     * The per-poll driver materialization is O(pageSize) by construction —
     * the reference's own fetch shape (`AuditLogReader.java:199-254`). */
   def pollJdbc(source: JdbcAuditSource): Int = {
-    import spark.implicits._
     val after = watermark.get().getOrElse(0L)
     val entries = source.nextPage(after).collect().toSeq
     if (entries.isEmpty) return 0
-    processBatch(spark.createDataset(entries))
+    processPage(entries)
     watermark.set(math.max(entries.map(_.id).max, after))
     entries.size
   }
@@ -305,4 +321,9 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
       }
       .start()
   }
+}
+
+object IncrementalServer {
+  /** Longest failure message kept on a job's state row. */
+  private[graft] val MaxErrorChars = 1000
 }

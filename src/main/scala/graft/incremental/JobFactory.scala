@@ -1,14 +1,13 @@
 package graft.incremental
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.model._
 
 /**
  * Audit-entry → replication-job planning (SURVEY §2.9 ST7/ST8 + filters
- * P2-P4). Pure Dataset transform — the reference's
- * `ReplicationJobFactory.createReplicationJobs`
+ * P2-P4). A plain function of each entry, run on the driver over a
+ * collected page — the reference's `ReplicationJobFactory.createReplicationJobs`
  * (`incremental/ReplicationJobFactory.java:486-721`) minus the side
  * effects, which live in [[IncrementalServer]].
  */
@@ -96,22 +95,21 @@ object JobFactory {
   private def isThrift(commandType: String): Boolean =
     commandType != null && commandType.startsWith("THRIFT_")
 
+  private def hasTarget(e: AuditLogEntry): Boolean =
+    e.outputTables.nonEmpty || e.outputPartitions.nonEmpty ||
+      e.renameFrom.isDefined || e.commandType == ExchangeCommand ||
+      isThrift(e.commandType)
+
   /** P2/P3: command-type filter, no-output filter, object-name regex
-    * whitelist/blacklist chain (filters are pluggable Dataset transforms —
-    * the reference loads filter classes reflectively,
-    * `deploy/ReplicationLauncher.java:145-169`). Exchange-partition entries
-    * legally have no outputs (HIVE-12865) and pass through to the parser;
-    * THRIFT_* entries are exempt from the no-output drop like the
-    * reference's isThriftOperation check (database-level thrift events
-    * carry no table outputs yet must not be silently discarded). */
-  def filterEntries(entries: Dataset[AuditLogEntry],
-      cfg: JobFilterConfig): Dataset[AuditLogEntry] =
-    entries
-      .filter((e: AuditLogEntry) => !cfg.dropCommandTypes.contains(e.commandType))
-      .filter((e: AuditLogEntry) =>
-        e.outputTables.nonEmpty || e.outputPartitions.nonEmpty ||
-          e.renameFrom.isDefined || e.commandType == ExchangeCommand ||
-          isThrift(e.commandType))
+    * whitelist/blacklist chain; None = the entry plans no job.
+    * Exchange-partition entries legally have no outputs (HIVE-12865) and
+    * pass through to the parser; THRIFT_* entries are exempt from the
+    * no-output drop like the reference's isThriftOperation check
+    * (database-level thrift events carry no table outputs yet must not be
+    * silently discarded). */
+  private def filterEntry(e: AuditLogEntry, cfg: JobFilterConfig): Option[AuditLogEntry] =
+    Some(e)
+      .filter(e => !cfg.dropCommandTypes.contains(e.commandType) && hasTarget(e))
       .map { e =>
         // regexes match the case-NORMALIZED name (P7): a mixed-case entry
         // must not slip past a lowercase blacklist and then lowercase into
@@ -123,21 +121,26 @@ object JobFactory {
         e.copy(
           outputTables = e.outputTables.filter(keep),
           outputPartitions = e.outputPartitions.filter(keep))
-      }(entries.encoder)
-      .filter((e: AuditLogEntry) =>
-        e.outputTables.nonEmpty || e.outputPartitions.nonEmpty ||
-          e.renameFrom.isDefined || e.commandType == ExchangeCommand ||
-          isThrift(e.commandType))
+      }
+      .filter(hasTarget)
 
-  /**
-   * ST7 + ST8: route each entry to an operation and compact multi-partition
-   * outputs of one table into a single bulk job
-   * (`ReplicationJobFactory.java:585-620,660-671`).
-   */
+  /** [[plan]] over a Dataset holding one page: the page is collected, so
+    * it must be bounded like the pages [[IncrementalServer.processBatch]]
+    * takes. */
   def planJobs(spark: SparkSession, entries: Dataset[AuditLogEntry],
       cfg: JobFilterConfig = JobFilterConfig()): Dataset[JobState] = {
     import spark.implicits._
-    filterEntries(entries, cfg).flatMap { e =>
+    spark.createDataset(plan(entries.collect().toSeq, cfg))
+  }
+
+  /**
+   * ST7 + ST8: route each entry of a page to an operation and compact
+   * multi-partition outputs of one table into a single bulk job
+   * (`ReplicationJobFactory.java:585-620,660-671`). Runs on the driver, as
+   * the reference plans its fetched page in plain Java.
+   */
+  def plan(entries: Seq[AuditLogEntry], cfg: JobFilterConfig): Seq[JobState] =
+    entries.flatMap(filterEntry(_, cfg)).flatMap { e =>
       val op = e.commandType match {
         // DROPVIEW and THRIFT_DROP_PARTITION propagate as drops too
         // (`ReplicationJobFactory.java:587-592`) — falling through to COPY
@@ -157,7 +160,7 @@ object JobFactory {
         // (`ReplicationJobFactory.java:585-620`): any command with output
         // tables/partitions — CREATETABLE, QUERY, ALTERTABLE_ADDPARTS,
         // metadata-only ALTERTABLE_* ops, etc. — replicates as a copy.
-        // SHOW*/no-output entries were already dropped by filterEntries.
+        // SHOW*/no-output entries were already dropped by filterEntry.
         case _ => "COPY"
       }
       def split(name: String): (String, String, Option[String]) = {
@@ -183,7 +186,7 @@ object JobFactory {
           ExchangePartitionParser.parse(e.command) match {
             case Some(x) =>
               Seq(x).filter { x =>
-                // same normalization as filterEntries.keep: the FULL name
+                // same normalization as filterEntry's keep: the FULL name
                 // (partition values included) lowercases before matching,
                 // so one blacklist regex behaves identically on both paths
                 val name =
@@ -272,5 +275,4 @@ object JobFactory {
         case _ => Seq.empty
       }
     }
-  }
 }

@@ -27,7 +27,8 @@ object LockExecutor {
     Seq(primary) ++ rename
   }
 
-  /** Execute all jobs; returns (job, final status) in input id order.
+  /** Execute all jobs; returns (job, final status) in input id order, a
+    * job that threw as `FAILED: <exception>`.
     * Jobs are keyed by position — one audit entry can legally yield
     * several jobs with the same id (ST8 emits one per table).
     *
@@ -75,7 +76,7 @@ object LockExecutor {
           def run(): Unit = {
             val status =
               try runFn(j)
-              catch { case e: Throwable => s"FAILED: ${e.getMessage}" }
+              catch { case e: Throwable => s"FAILED: $e" }
             results.put(idx, status)
             lock.synchronized { lockKeys(j).foreach(held.remove) }
             if (remaining.decrementAndGet() == 0) done.countDown()

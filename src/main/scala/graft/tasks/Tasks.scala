@@ -1,5 +1,7 @@
 package graft.tasks
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.CatalogClient
@@ -317,17 +319,23 @@ object Tasks {
 
   /** T10 — retry wrapper: ≤8 attempts, exponential backoff base 2s cap 1h
     * (`ReplicationJob.java:60-103`; backoff `ReplicationUtils.java:446-463`).
-    * Sleep scale injectable so tests don't wait. */
+    * Sleep scale injectable so tests don't wait. Only non-fatal errors are
+    * retried: an interrupt (a drain deadline, a cancelled task) ends the
+    * job at once and leaves the thread's interrupt flag set. */
   def withRetry[A](maxRetries: Int = 8, baseMs: Long = 2000L,
       capMs: Long = 3600000L, sleeper: Long => Unit = Thread.sleep)(f: => A): A = {
     var attempt = 0
     while (true) {
-      try return f
-      catch {
-        case e: Throwable =>
+      try {
+        if (attempt > 0) sleeper(math.min(capMs, baseMs * (1L << (attempt - 1))))
+        return f
+      } catch {
+        case e: InterruptedException =>
+          Thread.currentThread().interrupt()
+          throw e
+        case NonFatal(e) =>
           attempt += 1
           if (attempt > maxRetries) throw e
-          sleeper(math.min(capMs, baseMs * (1L << (attempt - 1))))
       }
     }
     throw new IllegalStateException("unreachable")

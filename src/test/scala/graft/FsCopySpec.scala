@@ -2,12 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.batch.{BatchConfig, BatchReplication}
 import graft.fs.{CopyExec, FsOps, SyncStats}
@@ -19,34 +17,6 @@ import graft.tasks.{TaskContext, Tasks}
   * (add/update/delete, skip-equal), equalDirs — mirroring the reference's
   * FsUtils/DistCpWrapper contracts. */
 class FsCopySpec extends TestBase {
-
-  /** Runs `body` and counts the Spark jobs it started. Jobs are matched by
-    * a local property set on this thread (Spark carries it to the threads
-    * a query spawns). Listener events arrive asynchronously but in order,
-    * so a tagged sentinel job marks the point where every job `body`
-    * started has been seen. */
-  private def jobsStartedBy[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      val out = try body finally sc.setLocalProperty(key, null)
-      sc.setLocalProperty(key, tag + "-end")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(tag + "-end") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(tag + "-end"), "sentinel job never reached the listener")
-      (out, seen.asScala.count(_ == tag))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Files under `root` as (relative path, content), hidden ones included
     * (the local FileSystem's binary `.crc` sidecars among them). */

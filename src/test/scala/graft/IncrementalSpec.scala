@@ -452,7 +452,7 @@ class IncrementalSpec extends TestBase {
     val after = state.current().collect().sortBy(_.id).toSeq
     assert(after == before, s"compaction changed the view: $after vs $before")
     // physically one row per job now
-    assert(spark.read.parquet(path).count() == 2)
+    assert(spark.read.json(path).count() == 2)
     assert(state.restoreRunnable().map(_.table) == Seq("t2"))
 
     // a NEW store over the compacted log continues seq strictly above the

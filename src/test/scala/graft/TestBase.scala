@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +28,34 @@ trait TestBase extends AnyFunSuite {
   def writeFile(dir: Path, name: String, content: String): Unit = {
     Files.createDirectories(dir)
     Files.writeString(dir.resolve(name), content)
+  }
+
+  /** Runs `body` and counts the Spark jobs it started. Jobs are matched by
+    * a local property set on this thread (Spark carries it to the threads
+    * a query spawns). Listener events arrive asynchronously but in order,
+    * so a tagged sentinel job marks the point where every job `body`
+    * started has been seen. */
+  def jobsStartedBy[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, tag + "-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(tag + "-end") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(tag + "-end"), "sentinel job never reached the listener")
+      (out, seen.asScala.count(_ == tag))
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Fresh in-memory catalog with a unique id. */
