@@ -95,23 +95,17 @@ object BatchReplication {
   private[graft] def copyData(spark: SparkSession, cfg: BatchConfig,
       bound: CopyExec.Bound): Long = {
     import spark.implicits._
-    val destOf = locationRewriter(cfg)
+    val (srcRoot, destRoot) = (cfg.srcFsRoot, cfg.destFsRoot)
     val units = spark.read.parquet(cfg.planDir).as[Action]
       .filter((a: Action) =>
         a.updateData && a.srcPath.isDefined &&
           (a.taskType == TaskType.CopyUnpartitionedTable ||
            a.taskType == TaskType.CopyPartition))
-      .map(a => SyncUnit(Seq(a.srcPath.get), destOf(a.srcPath.get)))
+      .map(a => SyncUnit(Seq(a.srcPath.get),
+        TaskContext.destLocation(srcRoot, destRoot, a.srcPath.get)))
       .filter((u: SyncUnit) => u.srcRoots.head != u.destRoot)
     CopyExec.execute(CopyExec.plan(units, CopyExec.AllOps, cfg.verifyChecksum,
       cfg.copyParallelism, bound)).copied
-  }
-
-  private def locationRewriter(cfg: BatchConfig): String => String = {
-    val (srcRoot, destRoot) = (cfg.srcFsRoot, cfg.destFsRoot)
-    (loc: String) =>
-      if (loc.startsWith("s3a://") || loc.startsWith("s3n://")) loc
-      else loc.replace(srcRoot, destRoot)
   }
 
   /** Commit one plan action's metadata against the dest catalog (data moved
@@ -119,28 +113,14 @@ object BatchReplication {
   private def commitOne(ctx: TaskContext, src: graft.catalog.CatalogClient,
       a: Action): Unit = a.taskType match {
     case TaskType.CopyUnpartitionedTable =>
-      src.getTable(a.db, a.table).foreach { t =>
-        Tasks.resolveConflict(ctx, t)
-        val dest = Tasks.destTableMeta(ctx, t)
-        if (ctx.destCatalog.getTable(a.db, a.table).isEmpty)
-          ctx.destCatalog.createTable(dest)
-        else ctx.destCatalog.alterTable(a.db, a.table, dest)
-      }
+      src.getTable(a.db, a.table).foreach(Tasks.commitTable(ctx, _))
     case TaskType.CopyPartitionedTable =>
-      src.getTable(a.db, a.table).foreach(t =>
-        Tasks.copyPartitionedTable(ctx, t))
+      src.getTable(a.db, a.table).foreach(Tasks.copyPartitionedTable(ctx, _))
     case TaskType.CopyPartition =>
       for {
         t <- src.getTable(a.db, a.table)
         p <- src.getPartition(a.db, a.table, a.partName.get)
-      } {
-        val dest = Tasks.destPartitionMeta(ctx, p)
-        if (ctx.destCatalog.getTable(a.db, a.table).isEmpty)
-          Tasks.copyPartitionedTable(ctx, t)
-        if (ctx.destCatalog.getPartition(a.db, a.table, p.partName).isEmpty)
-          ctx.destCatalog.addPartition(dest)
-        else ctx.destCatalog.alterPartition(dest)
-      }
+      } Tasks.commitPartitions(ctx, t, Seq(p))
     case TaskType.DropTable =>
       Tasks.dropTable(ctx, a.db, a.table, None)
     case TaskType.DropPartition =>

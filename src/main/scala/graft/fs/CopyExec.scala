@@ -84,12 +84,6 @@ object CopyExec {
   private val ClearStaging = "CLEAR_STAGING"
   private val Staging = ".graft-tmp"
 
-  /** Copy one file with the full protocol. */
-  def copyOnePublic(fs: FileSystem, conf: Configuration,
-      srcRoot: String, destRoot: String, f: FileEntry,
-      verifyChecksum: Boolean = false): CopyResult =
-    copyOne(fs, conf, srcRoot, destRoot, f, verifyChecksum)
-
   /** Content digest for checksum-level comparison. The reference compares
     * Hadoop `FileChecksum`s (`batch/BatchUtils.java:105-111`), which many
     * stores (LocalFileSystem, most object stores) don't expose — so the
@@ -109,7 +103,8 @@ object CopyExec {
     md.digest()
   }
 
-  private def copyOne(fs: FileSystem, conf: Configuration,
+  /** Copy one file with the full protocol. */
+  private[graft] def copyOne(fs: FileSystem, conf: Configuration,
       srcRoot: String, destRoot: String, f: FileEntry,
       verifyChecksum: Boolean): CopyResult = {
     val src = new Path(srcRoot, f.relPath)

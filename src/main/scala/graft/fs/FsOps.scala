@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 import graft.model.FileEntry
 
@@ -105,14 +105,5 @@ object FsOps {
         }
       }
     }
-  }
-
-  /** Manifest of all visible files under `root`, relative to it, listed in
-    * Spark. */
-  def listFiles(spark: SparkSession, root: String,
-      targetParallelism: Int = 32): Dataset[FileEntry] = {
-    import spark.implicits._
-    listDistributed(Seq((root, root)).toDS(), targetParallelism)
-      .map(l => FileEntry(l.root, l.relPath, l.size, l.mtime))
   }
 }

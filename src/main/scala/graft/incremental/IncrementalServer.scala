@@ -96,8 +96,8 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
       case TaskType.CopyPartition | TaskType.CopyPartitions =>
         src.getTable(j.db, j.table) match {
           case Some(t) =>
-            // ST8 bulk job under the table's lock: T4's common-dir
-            // optimistic copy replaces N per-partition copies when cheap
+            // ST8 bulk job under the table's lock: T4 copies all of its
+            // partitions in one copy plan, then commits each
             val metas = j.partitions.flatMap(p =>
               src.getPartition(j.db, j.table, p).orElse(
                 if (j.partitions.size == 1) serializedPartition(j) else None))

@@ -2,10 +2,10 @@ package graft.tasks
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.catalog.CatalogClient
-import graft.fs.CopyExec
+import graft.fs.{CopyExec, SyncUnit}
 import graft.model._
 
 /**
@@ -30,15 +30,20 @@ final case class TaskContext(
     // replay of a stale event; true (default) replicates unconditionally
     overwriteNewer: Boolean = true) {
 
-  /** P8: map a src location to its dest location (same relative path under
-    * the dest root; s3 passthrough —
-    * `configuration/DestinationObjectFactory.java:49-77`). */
+  /** [[TaskContext.destLocation]] between this context's roots. */
   def destLocation(srcLoc: String): String =
-    if (srcLoc.startsWith("s3a://") || srcLoc.startsWith("s3n://")) srcLoc
-    else srcLoc.replace(srcFsRoot, destFsRoot)
+    TaskContext.destLocation(srcFsRoot, destFsRoot, srcLoc)
 }
 
 object TaskContext {
+  /** P8: map a src location to its dest location (same relative path under
+    * the dest root; s3 passthrough —
+    * `configuration/DestinationObjectFactory.java:49-77`). Plain strings in
+    * and out, so Spark closures call it without capturing a context. */
+  def destLocation(srcFsRoot: String, destFsRoot: String, srcLoc: String): String =
+    if (srcLoc.startsWith("s3a://") || srcLoc.startsWith("s3n://")) srcLoc
+    else srcLoc.replace(srcFsRoot, destFsRoot)
+
   /** Context for metadata-only task paths. Batch stage-3 commits run inside
     * `mapPartitions` on executors, where no SparkSession exists — and none
     * is needed: the metadata tasks (conflict resolve, dest-object build,
@@ -63,43 +68,64 @@ object Tasks {
   case object DestNewer extends Outcome
   final case class NotCompletable(reason: String) extends Outcome
 
-  /** P10 — build the dest object: src metadata, rewritten location, dest
-    * params merged under src params, src-cluster stamp
-    * (`DestinationObjectFactory.java:90-154`). */
-  def destTableMeta(ctx: TaskContext, src: TableMeta): TableMeta = {
-    val existing = ctx.destCatalog.getTable(src.db, src.table)
-    src.copy(
-      location = ctx.destLocation(src.location),
-      parameters = existing.map(_.parameters).getOrElse(Map.empty) ++
-        src.parameters + (TableMeta.SrcCluster -> "src"))
-  }
+  /** P10 — build the dest object: src metadata, rewritten location, the
+    * existing dest object's params merged under src params, src-cluster
+    * stamp (`DestinationObjectFactory.java:90-154`). */
+  private def destTableMeta(ctx: TaskContext, src: TableMeta,
+      existing: Option[TableMeta]): TableMeta =
+    src.copy(location = ctx.destLocation(src.location), parameters =
+      existing.map(_.parameters).getOrElse(Map.empty) ++ src.parameters +
+        (TableMeta.SrcCluster -> "src"))
 
-  def destPartitionMeta(ctx: TaskContext, src: PartitionMeta): PartitionMeta = {
-    val existing = ctx.destCatalog.getPartition(src.db, src.table, src.partName)
-    src.copy(
-      location = ctx.destLocation(src.location),
-      parameters = existing.map(_.parameters).getOrElse(Map.empty) ++
-        src.parameters + (TableMeta.SrcCluster -> "src"))
-  }
+  private def destPartitionMeta(ctx: TaskContext, src: PartitionMeta,
+      existing: Option[PartitionMeta]): PartitionMeta =
+    src.copy(location = ctx.destLocation(src.location), parameters =
+      existing.map(_.parameters).getOrElse(Map.empty) ++ src.parameters +
+        (TableMeta.SrcCluster -> "src"))
 
-  /** T9 — conflict handler: a dest table whose partition keys differ must
-    * be dropped before copy (`ObjectConflictHandler.java:51-121`). */
-  def resolveConflict(ctx: TaskContext, src: TableMeta): Unit =
-    ctx.destCatalog.getTable(src.db, src.table).foreach { dest =>
-      if (dest.partitionKeys != src.partitionKeys) {
-        ctx.destCatalog.dropTable(src.db, src.table)
-      }
+  /** T9 — conflict handler: a dest table whose partition keys differ is
+    * dropped, so the commit creates it afresh
+    * (`ObjectConflictHandler.java:51-121`). No catalog client deletes data
+    * on a drop (tables are created external), so the drop may follow the
+    * copy. Returns the dest table that is left. */
+  def resolveConflict(ctx: TaskContext, src: TableMeta): Option[TableMeta] =
+    ctx.destCatalog.getTable(src.db, src.table).filter { dest =>
+      val keep = dest.partitionKeys == src.partitionKeys
+      if (!keep) ctx.destCatalog.dropTable(src.db, src.table)
+      keep
     }
 
-  /** T1 — copy an unpartitioned table: guards → conflict → dir sync
-    * (copies nothing when already equal) → metadata commit
-    * (`CopyUnpartitionedTableTask.java:82-201`). */
+  /** Table commit: conflict resolve, then create or alter the dest table.
+    * Touches only `ctx.destCatalog`, so batch stage 3 runs it on executors. */
+  def commitTable(ctx: TaskContext, src: TableMeta): Unit = {
+    val existing = resolveConflict(ctx, src)
+    val dest = destTableMeta(ctx, src, existing)
+    if (existing.isEmpty) ctx.destCatalog.createTable(dest)
+    else ctx.destCatalog.alterTable(src.db, src.table, dest)
+  }
+
+  /** Partition commit: create the dest table when it is missing (T2), then
+    * add or alter each partition, reading it once. Touches only
+    * `ctx.destCatalog`, so batch stage 3 runs it on executors. */
+  def commitPartitions(ctx: TaskContext, srcTable: TableMeta,
+      parts: Seq[PartitionMeta]): Unit = {
+    if (ctx.destCatalog.getTable(srcTable.db, srcTable.table).isEmpty)
+      copyPartitionedTable(ctx, srcTable)
+    parts.foreach { src =>
+      val existing = ctx.destCatalog.getPartition(src.db, src.table, src.partName)
+      val dest = destPartitionMeta(ctx, src, existing)
+      if (existing.isEmpty) ctx.destCatalog.addPartition(dest)
+      else ctx.destCatalog.alterPartition(dest)
+    }
+  }
+
+  /** T1 — copy an unpartitioned table: guard → dir sync (copies nothing
+    * when already equal) → commit (`CopyUnpartitionedTableTask.java:82-201`). */
   def copyUnpartitionedTable(ctx: TaskContext, src: TableMeta): Outcome = {
     if (src.isPartitioned) return NotCompletable("table is partitioned")
     if (!ctx.overwriteNewer &&
         ctx.destCatalog.getTable(src.db, src.table)
           .exists(_.lastModified > src.lastModified)) return DestNewer
-    resolveConflict(ctx, src)
     val destLoc = ctx.destLocation(src.location)
     if (destLoc != src.location) CopyExec.syncDir(ctx.spark, src.location, destLoc)
     commitTable(ctx, src)
@@ -110,126 +136,39 @@ object Tasks {
     * (`CopyPartitionedTableTask.java:69-154`). */
   def copyPartitionedTable(ctx: TaskContext, src: TableMeta): Outcome = {
     if (!src.isPartitioned) return NotCompletable("table is not partitioned")
-    resolveConflict(ctx, src)
     commitTable(ctx, src)
     Done
   }
 
-  private def commitTable(ctx: TaskContext, src: TableMeta): Unit = {
-    val dest = destTableMeta(ctx, src)
-    ctx.destCatalog.getTable(src.db, src.table) match {
-      case None => ctx.destCatalog.createTable(dest)
-      case Some(_) => ctx.destCatalog.alterTable(src.db, src.table, dest)
-    }
-  }
-
-  /** T3 — copy one partition: parent table must exist (else T2 first),
-    * dir sync (copies nothing when already equal), add/alter partition
-    * (`CopyPartitionTask.java:98-263`). */
+  /** T3 — copy one partition (`CopyPartitionTask.java:98-263`): T4 with
+    * one partition. */
   def copyPartition(ctx: TaskContext, srcTable: TableMeta,
-      src: PartitionMeta): Outcome = {
-    if (!ctx.overwriteNewer &&
-        ctx.destCatalog.getPartition(src.db, src.table, src.partName)
-          .exists(_.lastModified > src.lastModified)) return DestNewer
-    if (ctx.destCatalog.getTable(src.db, src.table).isEmpty) {
-      copyPartitionedTable(ctx, srcTable)
-    }
-    val destLoc = ctx.destLocation(src.location)
-    if (destLoc != src.location) CopyExec.syncDir(ctx.spark, src.location, destLoc)
-    val dest = destPartitionMeta(ctx, src)
-    ctx.destCatalog.getPartition(src.db, src.table, src.partName) match {
-      case None => ctx.destCatalog.addPartition(dest)
-      case Some(_) => ctx.destCatalog.alterPartition(dest)
-    }
-    Done
-  }
+      src: PartitionMeta): Outcome =
+    copyPartitions(ctx, srcTable, Seq(src))
 
   /**
-   * T4 — bulk partition copy with the reference's optimistic common-dir
-   * rewrite (`CopyPartitionsTask.java:137-283`): when every partition lives
-   * under one common ancestor and that directory isn't more than 2× the
-   * partitions' own bytes, ONE directory sync replaces N per-partition
-   * copies; the per-partition step's sync then finds nothing to copy and
-   * it commits metadata. Sizes come from a single manifest listing, not N.
+   * T4 — copy partitions of one table (`CopyPartitionsTask.java:137-283`).
+   * Each partition a newer dest does not guard is one copy unit, its own
+   * dir mirrored into its dest dir, and all of them run as one copy plan;
+   * then their metadata is committed. The reference copies a common
+   * ancestor dir instead when that is cheap, because each of its DistCp
+   * runs has a fixed cost; one plan over many units has no such cost, and
+   * touches nothing outside the job's partitions. [[DestNewer]] when the
+   * guard held back every partition.
    */
   def copyPartitions(ctx: TaskContext, srcTable: TableMeta,
       parts: Seq[PartitionMeta]): Outcome = {
     if (parts.isEmpty) return Noop
-    val common = parts.map(_.location)
-      .foldLeft(Option.empty[Vector[String]])(
-        graft.planner.DiffPlanner.CommonAncestorAgg.reduce)
-    val commonDir = graft.planner.DiffPlanner.CommonAncestorAgg.finish(common)
-    if (commonDir.nonEmpty && parts.size > 1) {
-      // Sizing needs only two sums: never materialize the per-file
-      // manifest on the driver (at 100 TB a table's manifest is millions
-      // of rows; the reference's driver-side partition materialization is
-      // its own documented pain point).
-      val manifest = graft.fs.FsOps.listFiles(ctx.spark, commonDir)
-      val partRels = parts.map(p =>
-        p.location.stripPrefix(commonDir).stripPrefix("/"))
-      val sums = partitionSizeSums(manifest.toDF(), partRels).head()
-      val (totalBytes, partBytes) = (sums.getLong(0), sums.getLong(1))
-      if (totalBytes <= 2 * partBytes) {
-        CopyExec.syncDir(ctx.spark, commonDir, ctx.destLocation(commonDir))
-      }
-    }
-    // per-partition pass: with the bulk copy done the dirs are already
-    // equal, so copyPartition only commits metadata (idempotent either way)
-    val outcomes = parts.map(p => copyPartition(ctx, srcTable, p))
-    outcomes.collectFirst { case nc: NotCompletable => nc }.getOrElse(Done)
-  }
-
-  /**
-   * T4 sizing frame: ONE row `(totalBytes, partBytes)` — all bytes under
-   * the common dir vs bytes inside any partition's relative dir.
-   *
-   * Membership is a broadcast join on the file's partition-depth path
-   * prefix, NOT an O(partitions) OR-predicate: T8 feeds this every
-   * partition of a table, and at 10k partitions the predicate form is a
-   * ~20k-node boolean tree that blows whole-stage codegen's 64 KB method
-   * limit (falling back to interpreted eval) and degrades analysis time
-   * quadratically. The join keeps the plan constant-size at any partition
-   * count (reference sizes from one listing the same way,
-   * `CopyPartitionsTask.java:137-283`).
-   */
-  def partitionSizeSums(manifest: DataFrame, partRels: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val total = coalesce(sum(col("size")), lit(0L))
-    val rels = partRels.distinct
-    if (rels.exists(_.isEmpty)) {
-      // a partition located AT the common dir owns every file under it
-      return manifest.agg(total.as("totalBytes"), total.as("partBytes"))
-    }
-    val spark = manifest.sparkSession
-    import spark.implicits._
-    val depths = rels.map(_.split('/').length).distinct.sorted
-    val relsDf = broadcast(rels.toDF("__prel"))
-    val inPart = coalesce(
-      sum(when(col("__prel").isNotNull, col("size"))), lit(0L))
-    if (depths.size == 1) {
-      // uniform partition depth (the normal layout): one left broadcast
-      // join on the depth-d prefix — rels are distinct so each file hits
-      // ≤1 of them, and both sums come from a single scan
-      manifest
-        .withColumn("__p", substring_index(col("relPath"), "/", depths.head))
-        .join(relsDf, col("__p") === col("__prel"), "left")
-        .agg(total.as("totalBytes"), inPart.as("partBytes"))
-    } else {
-      // rare mixed-depth layout: try every depth's prefix per file, then
-      // collapse back to one row per file (nested partition dirs could
-      // otherwise double-count a file)
-      manifest
-        .select(col("relPath"), col("size"), explode(array(
-          depths.map(d => substring_index(col("relPath"), "/", d)): _*))
-          .as("__cand"))
-        .join(relsDf, col("__cand") === col("__prel"), "left")
-        .groupBy(col("relPath"))
-        .agg(first(col("size")).as("size"),
-          max(col("__prel").isNotNull).as("__hit"))
-        .agg(total.as("totalBytes"),
-          coalesce(sum(when(col("__hit"), col("size"))), lit(0L))
-            .as("partBytes"))
-    }
+    val open = parts.filter(p => ctx.overwriteNewer ||
+      !ctx.destCatalog.getPartition(p.db, p.table, p.partName)
+        .exists(_.lastModified > p.lastModified))
+    if (open.isEmpty) return DestNewer
+    val units = open.map(p => SyncUnit(Seq(p.location), ctx.destLocation(p.location)))
+      .filter(u => u.srcRoots.head != u.destRoot)
+    if (units.nonEmpty) CopyExec.execute(CopyExec.plan(ctx.spark, units,
+      CopyExec.AllOps, verifyChecksum = false, parallelism = 32, CopyExec.DefaultBound))
+    commitPartitions(ctx, srcTable, open)
+    Done
   }
 
   /** T5 — TLDT-guarded drops: only drop when the dest object still carries
@@ -259,11 +198,11 @@ object Tasks {
    * T8 — copy a COMPLETE table, data included for every partition
    * (`CopyCompleteTableTask.java:86-162`, invoked from `RenameTableTask`):
    * unpartitioned ⇒ T1; partitioned ⇒ T2 metadata commit, then enumerate
-   * the source partitions and bulk-copy them (T4, with the common-dir
-   * optimistic rewrite). The reference materializes every partition object
-   * in driver memory — its own documented pain point; here the enumeration
-   * is bounded to one table's partition names and all file volume flows
-   * through the distributed copy path.
+   * the source partitions and copy them as one T4 job (one copy plan). The
+   * reference materializes every partition object in driver memory — its
+   * own documented pain point; here the enumeration is bounded to one
+   * table's partition names, and the copy engine takes the file volume to
+   * Spark once it crosses its driver-side bound.
    */
   def copyCompleteTable(ctx: TaskContext, srcCatalog: CatalogClient,
       src: TableMeta): Outcome = {
@@ -287,7 +226,7 @@ object Tasks {
     if (ctx.destCatalog.getTable(to.db, to.table).isDefined) return Noop
     ctx.destCatalog.getTable(fromDb, fromTable) match {
       case Some(_) =>
-        ctx.destCatalog.alterTable(fromDb, fromTable, destTableMeta(ctx, to))
+        ctx.destCatalog.alterTable(fromDb, fromTable, destTableMeta(ctx, to, None))
         Done
       case None =>
         copyCompleteTable(ctx, srcCatalog, to)
@@ -307,7 +246,7 @@ object Tasks {
     ctx.destCatalog.getPartition(to.db, to.table, fromName) match {
       case Some(_) =>
         ctx.destCatalog.renamePartition(to.db, to.table, fromName,
-          destPartitionMeta(ctx, to))
+          destPartitionMeta(ctx, to, None))
         Done
       case None => srcTable match {
         case Some(t) => copyPartition(ctx, t, to)

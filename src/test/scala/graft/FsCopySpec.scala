@@ -60,7 +60,7 @@ class FsCopySpec extends TestBase {
     (src, dest)
   }
 
-  test("listFiles returns relative paths, sizes, and skips hidden files") {
+  test("both listers return relative paths and sizes and skip hidden files") {
     val root = tmpDir("fs-list")
     writeFile(root, "a.txt", "aaa")
     writeFile(root.resolve("sub"), "b.txt", "bbbb")
@@ -69,9 +69,15 @@ class FsCopySpec extends TestBase {
     writeFile(root, ".stage", "x")
     writeFile(root.resolve("_tmpdir"), "inside.txt", "x")
 
-    val files = FsOps.listFiles(spark, root.toUri.toString).collect()
-      .map(f => (f.relPath, f.size)).sortBy(_._1)
-    assert(files.toSeq == Seq(("a.txt", 3L), ("sub/b.txt", 4L), ("sub/deep/c.txt", 1L)))
+    import spark.implicits._
+    val r = root.toUri.toString
+    val expected = Seq(("a.txt", 3L), ("sub/b.txt", 4L), ("sub/deep/c.txt", 1L))
+    val bounded = FsOps.listBounded(new Configuration(), Seq(r), Long.MaxValue,
+      Long.MaxValue).map(_(r).map(f => (f.relPath, f.size)).sortBy(_._1))
+    assert(bounded.contains(expected), s"listBounded: $bounded")
+    val distributed = FsOps.listDistributed(Seq((r, r)).toDS(), 4).collect()
+      .map(l => (l.relPath, l.size)).sortBy(_._1).toSeq
+    assert(distributed == expected, s"listDistributed: $distributed")
   }
 
   test("syncDir copies adds+updates, deletes extras, skips equal") {
@@ -140,8 +146,8 @@ class FsCopySpec extends TestBase {
     val conf = new Configuration()
     val fs = new org.apache.hadoop.fs.Path(dest.toUri).getFileSystem(conf)
     val t0 = System.nanoTime()
-    val r = CopyExec.copyOnePublic(fs, conf, src.toUri.toString, dest.toUri.toString,
-      FileEntry(src.toUri.toString, "gone.txt", 3L, 0L))
+    val r = CopyExec.copyOne(fs, conf, src.toUri.toString, dest.toUri.toString,
+      FileEntry(src.toUri.toString, "gone.txt", 3L, 0L), verifyChecksum = false)
     val secs = (System.nanoTime() - t0) / 1e9
     assert(r.status.startsWith("FAILED"), s"result: $r")
     assert(r.bytes == 0L)
@@ -226,6 +232,13 @@ class FsCopySpec extends TestBase {
     val destDir = java.nio.file.Paths.get(java.net.URI.create(destLoc))
     assert(tree(destDir).filterNot(f => FsOps.isHidden(f._1)) ==
       Seq(("file1.txt", "foobar"), ("file2.txt", "123")))
+
+    // a 2-partition T4 is one plan under the bound: it runs on the driver
+    val parts = Seq("ds=2/hr=1", "ds=2/hr=2").map(partition(t, _))
+    val (bulk, bulkJobs) = jobsStartedBy(Tasks.copyPartitions(c, t, parts))
+    assert(bulk == Tasks.Done && bulkJobs == 0, s"copyPartitions: $bulk after $bulkJobs jobs")
+    parts.foreach(p => assert(destConn.connect().getPartition("db1", "small_t", p.partName)
+      .isDefined && CopyExec.equalDirs(spark, p.location, c.destLocation(p.location))))
 
     // a tree at the bound still goes through Spark
     val big = tmpDir("nojobs-big")

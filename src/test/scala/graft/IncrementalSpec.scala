@@ -212,6 +212,23 @@ class IncrementalSpec extends TestBase {
       .exists(_.status == JobStatus.DestNewer))
     assert(destConn.connect().getTable("db1", "t_two_way").get
       .parameters(TableMeta.Tldt) == "9999")
+
+    // the partition path: a partition job whose one dest partition is newer
+    val pt = partitionedTable("db1", "pt_two_way", srcWh)
+    val p = partition(pt, "ds=1/hr=1", tldt = 1000L)
+    srcConn.connect().createTable(pt)
+    srcConn.connect().addPartition(p)
+    def destLoc(loc: String) = graft.tasks.TaskContext.destLocation(
+      cfg.srcFsRoot, cfg.destFsRoot, loc)
+    destConn.connect().createTable(pt.copy(location = destLoc(pt.location)))
+    destConn.connect().addPartition(p.copy(location = destLoc(p.location),
+      parameters = p.parameters + (TableMeta.Tldt -> "9999")))
+    val prs = server.processBatch(spark.createDataset(Seq(
+      entry(2, "QUERY", outParts = Seq("db1.pt_two_way/ds=1/hr=1")))))
+    assert(prs.map(r => (r._1.operation, r._2)) ==
+      Seq((TaskType.CopyPartition, JobStatus.DestNewer)), s"got $prs")
+    assert(destConn.connect().getPartition("db1", "pt_two_way", "ds=1/hr=1").get
+      .parameters(TableMeta.Tldt) == "9999")
   }
 
   test("exchange-partition entry plans and executes a COPY_PARTITION of the target") {

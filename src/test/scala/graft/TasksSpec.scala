@@ -134,78 +134,70 @@ class TasksSpec extends TestBase {
     assert(destConn.connect().getTable("db1", "t1").isEmpty)
   }
 
-  test("T4 bulk copy: common-dir sync replaces per-partition copies; " +
-      "2x guard falls back when unrelated data dominates") {
-    val srcWh = tmpDir("bulk-src-wh")
-    val destWh = tmpDir("bulk-dest-wh")
-    val destConn = freshCatalog("bulk-dest")
-    val c = TaskContext(spark, destConn.connect(),
-      srcWh.toUri.toString.stripSuffix("/"), destWh.toUri.toString.stripSuffix("/"))
+  test("T4 copies its partitions in one copy plan and touches nothing outside them") {
+    def fresh(name: String, overwriteNewer: Boolean = true)
+        : (TaskContext, graft.catalog.InMemoryConnector, java.nio.file.Path) = {
+      val destConn = freshCatalog(s"$name-dest")
+      val srcWh = tmpDir(s"$name-src-wh")
+      val destWh = tmpDir(s"$name-dest-wh")
+      (TaskContext(spark, destConn.connect(), srcWh.toUri.toString.stripSuffix("/"),
+        destWh.toUri.toString.stripSuffix("/"), overwriteNewer), destConn, srcWh)
+    }
+    def dir(loc: String) = java.nio.file.Paths.get(java.net.URI.create(loc))
+    def converged(c: TaskContext, p: PartitionMeta) = assert(
+      graft.fs.CopyExec.equalDirs(spark, p.location, c.destLocation(p.location)),
+      s"partition ${p.partName} not copied")
 
+    val (c, destConn, srcWh) = fresh("bulk")
     val t = partitionedTable("db1", "bulk_t", srcWh)
     val parts = Seq("ds=1/hr=1", "ds=1/hr=2", "ds=1/hr=3").map(p => partition(t, p))
     assert(Tasks.copyPartitions(c, t, parts) == Tasks.Done)
     assert(destConn.connect().listPartitionNames("db1", "bulk_t").size == 3)
-    val destLoc = c.destLocation(t.location)
-    assert(graft.fs.CopyExec.equalDirs(spark, t.location, destLoc))
+    assert(graft.fs.CopyExec.equalDirs(spark, t.location, c.destLocation(t.location)))
 
-    // unrelated data > 2x partition bytes under the common dir: the bulk
-    // path must NOT be taken (per-partition copies still converge)
-    val destConn2 = freshCatalog("bulk-dest2")
-    val srcWh2 = tmpDir("bulk-src-wh2")
-    val destWh2 = tmpDir("bulk-dest-wh2")
-    val c2 = TaskContext(spark, destConn2.connect(),
-      srcWh2.toUri.toString.stripSuffix("/"), destWh2.toUri.toString.stripSuffix("/"))
+    // unrelated source data under the table dir is not dragged along
+    val (c2, _, srcWh2) = fresh("bulk-unrelated")
     val t2 = partitionedTable("db1", "bulk_u", srcWh2)
     val parts2 = Seq("ds=1/hr=1", "ds=1/hr=2").map(p => partition(t2, p))
-    val tableDir = java.nio.file.Paths.get(java.net.URI.create(t2.location))
-    writeFile(tableDir.resolve("unrelated"), "huge.bin", "x" * 10000)
+    writeFile(dir(t2.location).resolve("unrelated"), "huge.bin", "x" * 10000)
     assert(Tasks.copyPartitions(c2, t2, parts2) == Tasks.Done)
-    parts2.foreach { p =>
-      assert(graft.fs.CopyExec.equalDirs(spark, p.location,
-        c2.destLocation(p.location)), s"partition ${p.partName} not copied")
-    }
-    // the unrelated blob was not dragged along
-    val destUnrelated = java.nio.file.Paths.get(
-      java.net.URI.create(c2.destLocation(t2.location))).resolve("unrelated")
-    assert(!java.nio.file.Files.exists(destUnrelated))
+    parts2.foreach(converged(c2, _))
+    assert(!java.nio.file.Files.exists(dir(c2.destLocation(t2.location)).resolve("unrelated")))
+
+    // a dest-only file under the table dir but outside both partitions is
+    // left alone: no TLDT drop guard ever covered it
+    val (c3, _, srcWh3) = fresh("bulk-dest-only")
+    val t3 = partitionedTable("db1", "bulk_d", srcWh3)
+    val parts3 = Seq("ds=1/hr=1", "ds=2/hr=1").map(p => partition(t3, p))
+    val destOnly = dir(c3.destLocation(t3.location)).resolve("ds=3").resolve("hr=1")
+    writeFile(destOnly, "file1.txt", "dest-only")
+    assert(Tasks.copyPartitions(c3, t3, parts3) == Tasks.Done)
+    parts3.foreach(converged(c3, _))
+    assert(java.nio.file.Files.readString(destOnly.resolve("file1.txt")) == "dest-only")
+
+    // overwriteNewer = false: a partition the dest holds a newer version of
+    // keeps its dest files byte for byte; the other one is copied
+    val (c4, destConn4, srcWh4) = fresh("bulk-newer", overwriteNewer = false)
+    val t4 = partitionedTable("db1", "bulk_n", srcWh4)
+    val Seq(older, newer) = Seq("ds=1/hr=1", "ds=2/hr=1").map(p => partition(t4, p))
+    val newerDir = dir(c4.destLocation(newer.location))
+    writeFile(newerDir, "file1.txt", "written on the dest later")
+    writeFile(newerDir, "file2.txt", "4567")
+    destConn4.connect().createTable(t4.copy(location = c4.destLocation(t4.location)))
+    destConn4.connect().addPartition(newer.copy(location = c4.destLocation(newer.location),
+      parameters = newer.parameters + (TableMeta.Tldt -> "9999")))
+    assert(Tasks.copyPartitions(c4, t4, Seq(older, newer)) == Tasks.Done)
+    converged(c4, older)
+    assert(java.nio.file.Files.readString(newerDir.resolve("file1.txt")) ==
+      "written on the dest later")
+    assert(java.nio.file.Files.readString(newerDir.resolve("file2.txt")) == "4567")
+    assert(destConn4.connect().getPartition("db1", "bulk_n", newer.partName).get
+      .parameters(TableMeta.Tldt) == "9999")
+    // every partition guarded: the job reports DestNewer
+    assert(Tasks.copyPartitions(c4, t4, Seq(newer)) == Tasks.DestNewer)
   }
 
-  test("T4 sizing is a broadcast join, not an O(partitions) predicate") {
-    import spark.implicits._
-    // 500 partitions: the old OR-predicate form would be a ~2000-node
-    // boolean tree here; the join plan stays constant-size
-    val rels = (0 until 500).map(i => s"ds=$i")
-    val manifest = (0 until 2000)
-      .map(i => (s"ds=${i % 600}/f$i.parquet", 10L)).toDF("relPath", "size")
-    val df = Tasks.partitionSizeSums(manifest, rels)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"no broadcast join in:\n$plan")
-    assert(!plan.contains(" || "), "plan still carries an OR-chain filter")
-    val row = df.head()
-    // files with ds < 500 are in-partition: 3 full cycles of 600 (500 hits
-    // each) + 200 remainder, all < 500 ⇒ 1700 files
-    assert(row.getLong(0) == 20000L && row.getLong(1) == 17000L, s"$row")
-
-    // prefix means PATH prefix: ds=1x must not match rel ds=1
-    val tricky = Seq(("ds=1/f.parquet", 7L), ("ds=1x/f.parquet", 11L))
-      .toDF("relPath", "size")
-    val trow = Tasks.partitionSizeSums(tricky, Seq("ds=1")).head()
-    assert(trow.getLong(0) == 18L && trow.getLong(1) == 7L, s"$trow")
-
-    // mixed partition depths (rare layout) still counts each file once
-    val mixed = Seq(
-      ("ds=1/hr=1/a.parquet", 1L), ("ds=1/b.parquet", 2L),
-      ("other/c.parquet", 4L)).toDF("relPath", "size")
-    val mrow = Tasks.partitionSizeSums(mixed, Seq("ds=1", "ds=1/hr=1")).head()
-    assert(mrow.getLong(0) == 7L && mrow.getLong(1) == 3L, s"$mrow")
-
-    // a partition AT the common dir owns everything
-    val arow = Tasks.partitionSizeSums(tricky, Seq("", "ds=1")).head()
-    assert(arow.getLong(0) == 18L && arow.getLong(1) == 18L, s"$arow")
-  }
-
-  test("T8 on a many-partition table converges through the bulk sizing join") {
+  test("T8 on a many-partition table converges through one copy plan") {
     val srcConn = freshCatalog("many-src")
     val destConn = freshCatalog("many-dest")
     val srcWh = tmpDir("many-src-wh")
