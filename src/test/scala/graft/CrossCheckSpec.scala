@@ -303,11 +303,18 @@ class CrossCheckSpec extends TestBase {
     // rounds cannot converge and must fail LOUDLY (silent truncation
     // would split one component into many). The alternating algorithm's
     // round count is diameter-independent: the same budget suffices.
+    // 599 edges is under LocalCcMaxEdges, so the public call labels on the
+    // driver, which has no rounds; the budget applies to the distributed
+    // loop, called directly.
     val chain = (1L until 600L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val refused = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 3)
+      Dedup.connectedComponentsDistributed(chain, maxIter = 3)
     }
     assert(refused.getMessage.contains("did not converge"))
+    val local = Dedup.connectedComponents(chain, maxIter = 3)
+      .as[(Long, Long)].collect()
+    assert(local.length == 600 && local.forall(_._2 == 1L),
+      s"chain must collapse to cluster 1: ${local.filter(_._2 != 1L).take(5).toSeq}")
     val alt = Dedup.connectedComponentsAlternating(chain, maxIter = 15)
       .as[(Long, Long)].collect()
     assert(alt.length == 600 && alt.forall(_._2 == 1L),
@@ -652,8 +659,9 @@ class CrossCheckSpec extends TestBase {
     import spark.implicits._
     val real = Dedup.simhashPairs(WarehouseSim.read(spark, sfDir, "documents"))
       .select("doc_a", "doc_b").localCheckpoint()
-    // default mode (executor-local checkpoints)
-    val ccLocal = Dedup.connectedComponents(real)
+    // default mode (executor-local checkpoints). The public CC labels this
+    // graph on the driver, so the checkpointing loop is called directly.
+    val ccLocal = Dedup.connectedComponentsDistributed(real)
       .as[(Long, Long)].collect().toMap
     val altLocal = Dedup.connectedComponentsAlternating(real)
       .as[(Long, Long)].collect().toMap
@@ -663,7 +671,7 @@ class CrossCheckSpec extends TestBase {
       .createTempDirectory("graft_ckpt").toString
     try {
       spark.conf.set("spark.graft.checkpointDir", dir)
-      val ccRel = Dedup.connectedComponents(real)
+      val ccRel = Dedup.connectedComponentsDistributed(real)
         .as[(Long, Long)].collect().toMap
       val altRel = Dedup.connectedComponentsAlternating(real)
         .as[(Long, Long)].collect().toMap
