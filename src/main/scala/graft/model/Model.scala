@@ -203,6 +203,10 @@ object JobStatus {
   // DEST_IS_NEWER) — its own status so the state table / rollups show how
   // often the guard fires
   val DestNewer      = "DEST_IS_NEWER"
+
+  /** Every status, in the order rollups (`/status`, statsd) list them. */
+  val All: Seq[String] = Seq(Pending, Running, Successful, Failed,
+    NotCompletable, Aborted, DestNewer)
 }
 
 object JobState {

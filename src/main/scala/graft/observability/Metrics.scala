@@ -7,15 +7,12 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.incremental.StateStore
-import graft.model.JobStatus
-
 /**
  * Observability layer (SURVEY §2.4 A7/A8/A10, §2.9 ST9): the reference's
  * atomic counters + statsd gauges (`incremental/ReplicationCounters.java`,
  * `StatsTracker.java:36-66`) re-expressed with Spark-native machinery —
  * `Dataset.observe` metrics collected by a `QueryExecutionListener`, and
- * job lag computed from the state table.
+ * the lag alert buckets (lag itself comes from [[StatusServer]]'s rollup).
  */
 object Metrics {
 
@@ -49,19 +46,8 @@ object Metrics {
     c
   }
 
-  /** A10/ST9 — replication lag: age of the oldest non-terminal job in the
-    * state table (reference alerts on 1800/3600/7200/10800/21600s). */
-  def jobLagSeconds(state: StateStore, nowMs: Long): Option[Long] = {
-    val pending = state.current()
-      .filter((j: graft.model.JobState) =>
-        j.status == JobStatus.Pending || j.status == JobStatus.Running)
-    if (pending.isEmpty) None
-    else {
-      val oldest = pending.agg(min("createTime")).head().getLong(0)
-      Some((nowMs - oldest) / 1000L)
-    }
-  }
-
+  /** A10/ST9 — alert thresholds on replication lag, the age of the oldest
+    * non-terminal job in the state table ([[StatusServer]]'s rollup). */
   val LagThresholdsSeconds: Seq[Long] = Seq(1800L, 3600L, 7200L, 10800L, 21600L)
 
   def lagBucket(lagSeconds: Long): Int =

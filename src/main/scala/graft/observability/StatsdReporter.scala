@@ -27,11 +27,8 @@ final class StatsdReporter(host: String, port: Int, prefix: String = "graft")
     * so emitting is O(1) driver work between batches. */
   def emitJobStats(countsByStatus: Map[String, Long],
       lagSeconds: Option[Long]): Unit = {
-    Seq(JobStatus.Pending, JobStatus.Running, JobStatus.Successful,
-      JobStatus.Failed, JobStatus.NotCompletable, JobStatus.Aborted,
-      JobStatus.DestNewer)
-      .foreach(s =>
-        gauge(s"jobs.${s.toLowerCase}", countsByStatus.getOrElse(s, 0L)))
+    JobStatus.All.foreach(s =>
+      gauge(s"jobs.${s.toLowerCase}", countsByStatus.getOrElse(s, 0L)))
     lagSeconds.foreach(gauge("jobs.lag_seconds", _))
   }
 

@@ -179,10 +179,7 @@ final class StatusServer(state: StateStore, watermark: Watermark,
     val node = mapper.createObjectNode()
     val (byStatus, oldestRunnable) = rollup()
     val jobs = node.putObject("jobs")
-    Seq(JobStatus.Pending, JobStatus.Running, JobStatus.Successful,
-      JobStatus.Failed, JobStatus.NotCompletable, JobStatus.Aborted,
-      JobStatus.DestNewer)
-      .foreach(s => jobs.put(s, byStatus.getOrElse(s, 0L)))
+    JobStatus.All.foreach(s => jobs.put(s, byStatus.getOrElse(s, 0L)))
     watermark.get().foreach(node.put("watermark", _))
     oldestRunnable.foreach { oldest =>
       val lag = (System.currentTimeMillis() - oldest) / 1000L
@@ -326,9 +323,8 @@ final class StatusServer(state: StateStore, watermark: Watermark,
 object StatusServer {
   /** Terminal statuses — the reference's "retired" set (everything a
     * job can end in; PENDING/RUNNING are "active"). */
-  private[observability] val RetiredStatuses: Set[String] = Set(
-    JobStatus.Successful, JobStatus.Failed, JobStatus.NotCompletable,
-    JobStatus.Aborted, JobStatus.DestNewer)
+  private[observability] val RetiredStatuses: Set[String] =
+    JobStatus.All.toSet -- Set(JobStatus.Pending, JobStatus.Running)
 
   /** One-file dashboard polling every 10 s (the reference refreshes its
     * progress page on the same cadence as the server's poll sleep).

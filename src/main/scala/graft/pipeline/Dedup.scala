@@ -40,17 +40,6 @@ object Dedup {
   private val internalCaches =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to `parts`,
-    * restoring the session value afterwards — the shuffle-width twin of
-    * the edge-frame repartition the iterative graph operators already
-    * do: a fixed-point loop over a graph orders of magnitude smaller
-    * than the corpus should run EVERY per-round shuffle (labels,
-    * messages, grouped mins) at graph-derived width, not session width.
-    * Only frames MATERIALIZED inside `body` (checkpoints, counts) are
-    * affected; a lazily returned frame executes under the caller's
-    * width. Scale-adaptive by construction: `parts` derives from the
-    * measured edge count, so a genuinely large graph keeps a wide
-    * shuffle. */
   /** Session conf key bounding the iterative graph operators' explicit
     * broadcast regime: a loop whose measured (undirected, distinct)
     * edge count is at or below this broadcasts its node-sized frames
@@ -60,6 +49,24 @@ object Dedup {
     * label rows — comfortably under the broadcast caps); raise/lower
     * per session via `spark.conf.set`. */
   val GraphBroadcastMaxEdgesKey = "graft.graph.broadcastMaxEdges"
+
+  /** Shuffle width and broadcast wrapper of an iterative graph operator,
+    * both from its measured edge count: one shuffle partition per 500k
+    * edges, at least 2 and at most the session width, and node-sized
+    * frames broadcast into the per-round joins while `nEdges` is at most
+    * [[GraphBroadcastMaxEdgesKey]] (default 4M). AQE would reach the same
+    * joins by runtime SMJ→BHJ conversion, but only after materializing
+    * each exchange as its own stage; the explicit hint skips the exchange
+    * and the replanning barrier. */
+  private def graphSizing(spark: org.apache.spark.sql.SparkSession,
+      nEdges: Long): (Int, DataFrame => DataFrame) = {
+    val parts = math.max(2, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+      (nEdges / 500000L).toInt + 1))
+    val bcast = nEdges <= spark.conf
+      .getOption(GraphBroadcastMaxEdgesKey).map(_.toLong).getOrElse(4000000L)
+    (parts, df => if (bcast) broadcast(df) else df)
+  }
 
   /** Rebalance a CPU-dense pipeline's input to the session shuffle
     * width BEFORE its heavy per-row work — and only when the input's
@@ -94,7 +101,19 @@ object Dedup {
       BigInt(w) * BigInt(math.max(advisory, 1L))
   }
 
-  /** SINGLE-THREADED-SESSION assumption: the override below mutates the
+  /** Run `body` with `spark.sql.shuffle.partitions` scoped to `parts`,
+    * restoring the session value afterwards — the shuffle-width twin of
+    * the edge-frame repartition the iterative graph operators already
+    * do: a fixed-point loop over a graph orders of magnitude smaller
+    * than the corpus should run EVERY per-round shuffle (labels,
+    * messages, grouped mins) at graph-derived width, not session width.
+    * Only frames MATERIALIZED inside `body` (checkpoints, counts) are
+    * affected; a lazily returned frame executes under the caller's
+    * width. Scale-adaptive by construction: `parts` derives from the
+    * measured edge count, so a genuinely large graph keeps a wide
+    * shuffle.
+    *
+    * SINGLE-THREADED-SESSION assumption: the override below mutates the
     * shared session conf for the duration of `body` (scoped + restored).
     * A query PLANNED concurrently on the same SparkSession (e.g. a
     * streaming foreachBatch micro-batch) would inherit the narrowed
@@ -699,9 +718,11 @@ object Dedup {
     // one pass gives BOTH the edge count (shuffle sizing, the CC
     // discipline) and the node count the teleport base needs
     val st = edges0.agg(count(lit(1)), count_distinct(col("src"))).head()
-    val parts = math.max(2, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      (st.getLong(0) / 500000L).toInt + 1))
+    // rank frames are node-sized: broadcast into each iteration's edge
+    // join below the broadcast bound, so an iteration's only exchange is
+    // the dst-grouped message sum (the cached edge frame is never
+    // re-shuffled)
+    val (parts, maybeB) = graphSizing(spark, st.getLong(0))
     // src-partitioned ONCE: the degree aggregate, the degree join, and
     // every iteration's rank join all key on src, so they reuse this
     // exchange instead of re-shuffling the edge frame per step (the
@@ -711,14 +732,6 @@ object Dedup {
     val e2 = persistInternal("graph_rank_out",
       edges.join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
     val n = st.getLong(1)
-    // rank frames are node-sized: broadcast them into each iteration's
-    // edge join below the measured edge threshold, so an iteration's
-    // only exchange is the dst-grouped message sum (the cached edge
-    // frame is never re-shuffled); above it the join stays a plain
-    // shuffle join — the connectedComponents discipline
-    val bcast = st.getLong(0) <= spark.conf
-      .getOption(GraphBroadcastMaxEdgesKey).map(_.toLong).getOrElse(4000000L)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     val base = 1000000L / math.max(n, 1L)
     val base15 = (15L * base) / 100L
     var ranks = edges.select(col("src").as("doc_id")).distinct()
@@ -764,23 +777,13 @@ object Dedup {
     val edges0 = persistInternal("label_prop_edges",
       pairs.select(col(aCol).as("__x"), col(bCol).as("__y"))
         .unionAll(pairs.select(col(bCol).as("__x"), col(aCol).as("__y"))))
-    // near-dup graphs are tiny next to the corpus — right-size the
-    // per-round shuffles to the edge count (the connectedComponents
-    // discipline; full session width spends every round on task
-    // overhead)
-    val spark = pairs.sparkSession
-    val nEdges = edges0.count()
-    val parts = math.max(2, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      (nEdges / 500000L).toInt + 1))
+    // near-dup graphs are tiny next to the corpus: full session width
+    // spends every round on task overhead, and with node-sized per-round
+    // frames (state slices, mode votes) broadcast a round's only
+    // edge-frame exchange is the vote count
+    val (parts, maybeB) = graphSizing(pairs.sparkSession, edges0.count())
     val edges = persistInternal("label_prop_edges_sized",
       edges0.repartition(parts, col("__y")))
-    // node-sized per-round frames (state slices, mode votes) broadcast
-    // below the measured edge threshold — the connectedComponents
-    // discipline: a round's only edge-frame exchange is the vote count
-    val bcast = nEdges <= spark.conf
-      .getOption(GraphBroadcastMaxEdgesKey).map(_.toLong).getOrElse(4000000L)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     val seed = seeds.select(col(idCol).as("doc_id"),
       col(labelCol).cast("string").as("__seed"))
     val nodes = edges.select(col("__x").as("doc_id"))
@@ -1442,8 +1445,9 @@ object Dedup {
     * holds 100k `(src, dst)` rows plus a union-find over at most 200k ids.
     * Measured on a 4-core host, warm, on a random 100k-edge graph over
     * 126k ids: the `take` 0.10–0.19 s, union-find and local frame another
-    * 0.18–0.25 s, collecting the labels 0.22–0.34 s. The distributed loop
-    * costs 35–37 Spark jobs and 2.4–3.9 s on a 171-edge graph. */
+    * 0.18–0.25 s, collecting the labels 0.22–0.34 s. On a 171-edge graph
+    * of 2–8-member quasi-cliques the distributed labeler takes 2 rounds,
+    * 35 Spark jobs and 3.2–3.8 s; the driver path 0.14–0.17 s. */
   val LocalCcMaxEdges: Int = 100000
 
   /**
@@ -1459,8 +1463,10 @@ object Dedup {
    *    always its component's min id; the result is a local frame. There
    *    are no rounds, so `maxIter` and the non-convergence error do not
    *    apply and [[lastCcRounds]] reads 0.
-   *  - Above it, [[connectedComponentsDistributed]]: the rows the `take`
-   *    pulled are dropped and the pairs are read again by the loop.
+   *  - Above it, [[connectedComponentsAlternating]] (large-star /
+   *    small-star), whose round count does not depend on the graph's
+   *    diameter: the rows the `take` pulled are dropped and the pairs are
+   *    read again by the rounds.
    *
    * Both paths give the same rows (CcLocalSpec pins it): a row with a
    * null endpoint joins nothing, so its other endpoint stands alone unless
@@ -1478,7 +1484,7 @@ object Dedup {
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .take(maxLocalEdges + 1)
     if (edges.length > maxLocalEdges)
-      connectedComponentsDistributed(pairs, aCol, bCol, maxIter)
+      connectedComponentsAlternating(pairs, aCol, bCol, maxIter)
     else {
       lastCcRounds = 0
       localComponents(pairs.sparkSession, edges)
@@ -1513,108 +1519,6 @@ object Dedup {
     if (sawNull) rows.add(Row(null, null))
     spark.createDataFrame(rows, StructType(Seq(
       StructField("doc_id", LongType), StructField("cluster_id", LongType))))
-  }
-
-  /**
-   * The distributed [[connectedComponents]], which runs above
-   * [[LocalCcMaxEdges]] edge rows.
-   *
-   * Min-label propagation: each round every node takes the minimum label
-   * among itself and its neighbors — converges in ≤ eccentricity(min
-   * node) rounds, each round one equi-join + one aggregation. Near-dup
-   * components are dense and shallow (mostly cliques from banded
-   * candidate generation), so rounds stay single-digit; for adversarially
-   * deep graphs the large-star/small-star variant bounds rounds at
-   * O(log n), at the cost of two joins per round — not needed for dedup
-   * shapes. Labels are checkpointed per round (via [[cutLineage]] —
-   * executor-local by default, reliable under
-   * `spark.graft.checkpointDir`) so the plan does not grow with the
-   * iteration count. More than `maxIter` rounds fails loudly.
-   */
-  private[graft] def connectedComponentsDistributed(pairs: DataFrame,
-      aCol: String = "doc_a", bCol: String = "doc_b",
-      maxIter: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-    // undirected: propagate both ways; distinct collapses parallel edges
-    val undirected0 = edges
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    // near-dup graphs are usually tiny next to the corpus — right-size the
-    // per-round shuffles to the edge count (a 15k-edge graph on the
-    // session's full shuffle width spends every round on task overhead)
-    val nEdges = undirected0.count()
-    val parts = math.max(2, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      (nEdges / 500000L).toInt + 1))
-    // persisted LAZILY: the init-labels cut below materializes it, where
-    // the previous eager persist+count / persist+count entry sequence
-    // paid one extra scheduler barrier per CC call before any round ran
-    // (the count only re-ran the distinct the cache already holds)
-    val undirected = undirected0.repartition(parts, col("dst")).persist()
-    // node-sized loop frames (labels, grouped mins, the jump lookup)
-    // broadcast EXPLICITLY below the measured edge threshold: the only
-    // per-round exchange left is then the message groupBy. AQE would
-    // reach the same joins via runtime SMJ→BHJ conversion, but only
-    // after materializing each exchange as its own scheduled stage —
-    // the explicit hint skips the exchange AND the replanning barrier.
-    // Above the threshold (a genuinely large pair graph) the joins stay
-    // plain shuffle joins — scale-adaptive, conf-keyed.
-    val bcast = nEdges <= spark.conf
-      .getOption(GraphBroadcastMaxEdgesKey).map(_.toLong).getOrElse(4000000L)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    // every per-round shuffle (label joins, grouped mins, the pointer-
-    // jump self-join) runs at the SAME graph-derived width as the edge
-    // frame — at session width each round paid 32-task shuffles + AQE
-    // replanning per exchange for label-sized data
-    withShuffleParts(spark, parts) {
-    var labels = undirected.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")).transform(cutLineage)
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = undirected
-        .join(maybeB(labels.select(col("id").as("dst"), col("lbl").as("nlbl"))),
-          "dst")
-        .groupBy(col("src").as("id")).agg(min(col("nlbl")).as("min_nbr"))
-      // carry old + new in ONE checkpointed frame: the convergence check
-      // below is then a cheap filter-count on materialized partitions
-      // instead of an extra per-round join against the previous labels
-      val step = labels.as("l")
-        .join(maybeB(nbrMin.as("n")), Seq("id"), "left")
-        .select(col("id"), col("lbl").as("old"),
-          least(col("lbl"), coalesce(col("min_nbr"), col("lbl"))).as("lbl"))
-        .transform(cutLineage)
-      // pointer jump: also adopt the label OF the label (every label value
-      // is itself a node id, so `step` doubles as the lookup). Halves the
-      // hop distance per round — chain-shaped components converge in
-      // O(log diameter) rounds instead of O(diameter), for one extra join
-      // on the tiny materialized label frame. (`step` stays checkpointed:
-      // an uncut self-join duplicates the (labels ⋈ nbrMin) subtree and
-      // its exchanges — measured r15: removing this cut ADDED 10 stages
-      // and +1.7 s to dedup_clusters.)
-      val jumped = step
-        .join(maybeB(step.select(col("id").as("lbl"), col("lbl").as("plbl"))),
-          Seq("lbl"), "left")
-        .select(col("id"), col("old"),
-          least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
-        .transform(cutLineage)
-      changed = jumped.filter(col("lbl") < col("old")).count()
-      labels = jumped.select(col("id"), col("lbl"))
-      iter += 1
-    }
-    undirected.unpersist(blocking = false)
-    lastCcRounds = iter
-    // silently returning unconverged labels would split one component
-    // into several "clusters" and keep multiple representatives of the
-    // same duplicate group downstream — fail loudly instead
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        s"($changed labels still changing) — raise maxIter (graph diameter " +
-        "exceeds it) or use a log-round algorithm for this graph")
-    labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
-    } // withShuffleParts
   }
 
   /**
@@ -1789,11 +1693,10 @@ object Dedup {
   }
 
   /**
-   * Log-round connected components — the alternating large-star /
+   * The distributed [[connectedComponents]], which runs above
+   * [[LocalCcMaxEdges]] edge rows: the alternating large-star /
    * small-star algorithm (Kiveris et al., "Connected Components in
-   * MapReduce and Beyond", SoCC 2014): the escape hatch
-   * [[connectedComponents]]'s non-convergence error names for graphs
-   * whose diameter exceeds its round budget.
+   * MapReduce and Beyond", SoCC 2014).
    *
    *  - large-star: per node u, connect every LARGER neighbor to
    *    m = min(N(u) ∪ u) — flattens long tails upward.
@@ -1803,47 +1706,44 @@ object Dedup {
    *
    * Each round is two grouped-min joins over the CURRENT edge set
    * (which shrinks toward a star forest), and the round count is
-   * O(log² n) worst-case, independent of diameter — a path graph of
-   * length 10⁶ converges in ~10 rounds where plain min-label
-   * propagation needs diameter/2. The trade: per-round cost is two
-   * shuffles of the edge set vs one label join, so for the shallow
-   * quasi-clique graphs near-dup banding emits, [[connectedComponents]]
-   * is cheaper — use THIS variant when the graph shape is unknown or
-   * chain-like (see SCALE.md "Connected components at scale").
+   * O(log² n) worst-case, independent of diameter: a 600-node path
+   * converges within 15 rounds, a sparse random graph of 100k edges over
+   * 200k ids (long paths) in 8 (SCALE.md, "connected components at
+   * scale"). Edge and label frames are cut per round via [[cutLineage]]
+   * (executor-local by default, reliable under
+   * `spark.graft.checkpointDir`), so the plan does not grow with the
+   * round count. More than `maxIter` rounds fails loudly: unconverged
+   * labels would split one component into several clusters.
    *
-   * Output contract matches [[connectedComponents]] exactly:
-   * `(doc_id, cluster_id = min reachable id)`, every node of `pairs`
-   * present — equality with the min-label path is pinned in
-   * CrossCheckSpec, including a chain fixture the min-label path
-   * refuses at its round budget.
+   * Output contract is [[connectedComponents]]'s, and CcLocalSpec pins
+   * parity with its driver path: `(doc_id, cluster_id = min reachable
+   * id)` for every non-null endpoint of `pairs` (a self-loop-only node
+   * labels itself), and one `(null, null)` row when any endpoint is null;
+   * a null endpoint joins nothing.
    */
   def connectedComponentsAlternating(pairs: DataFrame,
       aCol: String = "doc_a", bCol: String = "doc_b",
       maxIter: Int = 30): DataFrame = {
-    // normalize ONCE to larger→smaller directed distinct edges; both
-    // star operations preserve that invariant (large-star emits (v, m)
-    // with v > u ≥ m, small-star emits pairs pointing at the group
-    // minimum), so the per-round re-normalization shuffles are saved
-    val edges0 = pairs
+    val ends = pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
+    // every endpoint is a node, including self-loop and null ones (the
+    // null id matches no label join, so it keeps the label null)
+    val nodes = ends.select(col("a").as("id"))
+      .unionAll(ends.select(col("b").as("id"))).distinct()
+      .transform(cutLineage)
+    // normalize ONCE to larger→smaller directed distinct edges (`=!=`
+    // drops self-loops and null endpoints); both star operations preserve
+    // that invariant (large-star emits (v, m) with v > u ≥ m, small-star
+    // emits pairs pointing at the group minimum), so the per-round
+    // re-normalization shuffles are saved
+    val e0 = cutLineage(ends.filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("src"),
         least(col("a"), col("b")).as("dst"))
+      .distinct())
     val spark = pairs.sparkSession
-    val nodes = edges0.select(col("src").as("id"))
-      .unionAll(edges0.select(col("dst").as("id"))).distinct()
-      .transform(cutLineage)
-    // node-sized per-round frames (grouped mins, label frames)
-    // broadcast below the measured edge threshold; per-round shuffles
-    // at graph-derived width — the connectedComponents discipline
-    val e0 = cutLineage(edges0.distinct())
-    val nEdges = e0.count()
-    val parts = math.max(2, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      (nEdges / 500000L).toInt + 1))
-    val bcast = nEdges <= spark.conf
-      .getOption(GraphBroadcastMaxEdgesKey).map(_.toLong).getOrElse(4000000L)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    // per-round shuffles at graph-derived width; node-sized frames
+    // (grouped mins, label frames) broadcast below the bound
+    val (parts, maybeB) = graphSizing(spark, e0.count())
     // emit (v, m(u)) for every neighbor v > u; m = min(N(u) ∪ u)
     def largeStar(e: DataFrame): DataFrame = {
       // e is directed distinct, so the two directions cannot collide
@@ -1862,32 +1762,34 @@ object Dedup {
         .unionAll(mins.select(col("src"), col("m").as("dst")))
         .distinct()
     }
-    def labelsOf(e: DataFrame): DataFrame = nodes
+    // each node's label under the edges `e` (its smallest out-neighbor,
+    // else itself), carried beside its previous label `old` in ONE frame:
+    // the convergence check is then a filter-count on the checkpointed
+    // frame instead of a second join against the previous labels
+    def relabel(labels: DataFrame, e: DataFrame): DataFrame = labels
       .join(
         maybeB(e.groupBy(col("src").as("id")).agg(min(col("dst")).as("mn"))),
         Seq("id"), "left")
-      .select(col("id"), coalesce(col("mn"), col("id")).as("lbl"))
+      .select(col("id"), col("lbl").as("old"),
+        coalesce(col("mn"), col("id")).as("lbl"))
     withShuffleParts(spark, parts) {
     var e = e0
-    var prev = cutLineage(labelsOf(e))
+    var labels = cutLineage(relabel(nodes.withColumn("lbl", col("id")), e))
     // (smallStar output keeps src > dst: it links nodes to a strictly
     // smaller group minimum, so the directed-distinct invariant holds)
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
       e = cutLineage(smallStar(largeStar(e)))
-      val cur = cutLineage(labelsOf(e))
-      changed = cur.as("c")
-        .join(prev.as("p"), Seq("id"))
-        .filter(col("c.lbl") =!= col("p.lbl")).count()
-      prev = cur
+      labels = cutLineage(relabel(labels.select("id", "lbl"), e))
+      changed = labels.filter(col("lbl") =!= col("old")).count()
       iter += 1
     }
     lastCcRounds = iter
     if (changed > 0) throw new IllegalStateException(
       s"connectedComponentsAlternating did not converge in $maxIter " +
         s"rounds ($changed labels still changing) — raise maxIter")
-    prev.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+    labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
     } // withShuffleParts
   }
 
@@ -2236,17 +2138,10 @@ object Dedup {
           greatest(col(aCol), col(bCol)).as("b"))
         .distinct())
     val spark = pairs0.sparkSession
-    val nEdges = edges0.count()
-    val parts = math.max(2, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      (nEdges / 500000L).toInt + 1))
-    // survivor sets are node-sized: broadcast them into the semi-joins
-    // below the measured edge threshold (the connectedComponents
-    // discipline), so a peel round's only exchange is the degree
+    // survivor sets are node-sized: broadcast into the semi-joins below
+    // the broadcast bound, so a peel round's only exchange is the degree
     // groupBy — the cached edge frame is never shuffled either way
-    val bcast = nEdges <= spark.conf
-      .getOption(GraphBroadcastMaxEdgesKey).map(_.toLong).getOrElse(4000000L)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    val (parts, maybeB) = graphSizing(spark, edges0.count())
     def survivorDegrees(keep: DataFrame): DataFrame = edges0
       .join(maybeB(keep.select(col("v").as("a"))), Seq("a"), "left_semi")
       .join(maybeB(keep.select(col("v").as("b"))), Seq("b"), "left_semi")

@@ -171,8 +171,9 @@ object PipelineQueries {
 
   /** Exact connected-components ground truth: simhash near-dup pairs →
     * recursive transitive closure → min reachable id per node. Shared by
-    * BOTH cluster queries (min-label and large-star/small-star) and the
-    * keeper query, so all consumers are certified against one oracle. */
+    * BOTH cluster queries (the public entry and large-star/small-star)
+    * and the keeper query, so all consumers are certified against one
+    * oracle. */
   /** simhash pairs as a reusable CTE (`pairs`): shared by the CC family
     * and the source-overlap rollup so every consumer certifies against
     * the one pair definition. */
@@ -493,8 +494,9 @@ object PipelineQueries {
     // Cluster assignment over verified near-dup pairs: connected
     // components with cluster_id = min reachable doc id. The oracle walks
     // the same pairs with a recursive CTE (transitive closure, then min
-    // per node) — exact, so the iterative min-label propagation in Spark
-    // is hash-verified end-to-end.
+    // per node) — exact, so `connectedComponents` (a driver union-find
+    // below its edge bound, large-star/small-star above) is hash-verified
+    // end-to-end.
     QueryDef("dedup_clusters", ccOracleSql) {
       (s, dir) =>
         // the session-standing pair frame (r14's graph-family artifact):
@@ -566,9 +568,9 @@ object PipelineQueries {
 
     // Same cluster contract, log-round algorithm: alternating large-star/
     // small-star (round count independent of graph diameter). The SAME
-    // exact transitive-closure oracle certifies it, so both CC variants
-    // are hash-verified against one ground truth; the chain-shaped graph
-    // the min-label path refuses is pinned in CrossCheckSpec.
+    // exact transitive-closure oracle certifies it, so both CC paths are
+    // hash-verified against one ground truth; a 600-node chain and its
+    // round budget are pinned in CrossCheckSpec.
     QueryDef("dedup_clusters_loground", ccOracleSql) {
       (s, dir) =>
         // standing pair frame — the line measures the alternating-star

@@ -9,9 +9,10 @@ import graft.pipeline.Dedup
 /**
  * The two paths of [[Dedup.connectedComponents]]: below
  * [[Dedup.LocalCcMaxEdges]] edge rows a union-find on the driver, above it
- * the distributed min-label loop ([[Dedup.connectedComponentsDistributed]]).
- * Both must give the same `(doc_id, cluster_id)` rows under the same
- * schema, and the driver path must start no Spark job past its `take`.
+ * the distributed large-star/small-star rounds
+ * ([[Dedup.connectedComponentsAlternating]]). Both must give the same
+ * `(doc_id, cluster_id)` rows under the same schema, and the driver path
+ * must start no Spark job past its `take`.
  */
 class CcLocalSpec extends TestBase {
 
@@ -25,11 +26,11 @@ class CcLocalSpec extends TestBase {
     df.schema.map(f => (f.name, f.dataType.simpleString))
 
   /** Asserts parity of the public entry (driver path here) with the
-    * distributed loop, and returns the labels. */
+    * distributed labeler, and returns the labels. */
   private def parity(pairs: DataFrame): Set[(Option[Long], Option[Long])] = {
     val local = Dedup.connectedComponents(pairs)
     assert(Dedup.lastCcRounds == 0, "graph under the bound must label on the driver")
-    val dist = Dedup.connectedComponentsDistributed(pairs)
+    val dist = Dedup.connectedComponentsAlternating(pairs)
     assert(shape(local) == shape(dist))
     assert(shape(local) == Seq("doc_id" -> "bigint", "cluster_id" -> "bigint"))
     val (l, d) = (rows(local), rows(dist))
@@ -118,6 +119,21 @@ class CcLocalSpec extends TestBase {
     Dedup.connectedComponentsBounded(pairs, "doc_a", "doc_b", 50,
       maxLocalEdges = shapes.size)
     assert(Dedup.lastCcRounds == 0)
+  }
+
+  test("near-threshold sparse random graph: the distributed path matches BFS") {
+    // average degree 1 (edges = ids / 2), the giant-component threshold:
+    // a tree-like giant component with long paths plus many small ones,
+    // the shape where label propagation needs rounds in the diameter
+    Seq(11L, 424242L).foreach { seed =>
+      val rng = new Random(seed)
+      val ids = 6000
+      val edges = Seq.fill(ids / 2)((rng.nextInt(ids).toLong, rng.nextInt(ids).toLong))
+      val over = Dedup.connectedComponentsBounded(edges.toDF("doc_a", "doc_b"),
+        "doc_a", "doc_b", 50, maxLocalEdges = 100)
+      assert(Dedup.lastCcRounds > 0, "a graph over the bound must run the distributed rounds")
+      assert(rows(over) == reference(edges), s"seed $seed")
+    }
   }
 
   test("under the bound: one Spark job (the take), and none to collect the result") {

@@ -271,10 +271,10 @@ class CrossCheckSpec extends TestBase {
       col("cluster_id") =!= col("doc_id")).count() == 0)
   }
 
-  test("alternating CC equals min-label CC on the real near-dup graph") {
+  test("alternating CC equals the public CC on the real near-dup graph") {
     import spark.implicits._
-    // same fixtures as the min-label test: chains, multiple components,
-    // empty input...
+    // same fixtures as the connected-components test above: chains,
+    // multiple components, empty input...
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 3L), (10L, 11L),
       (20L, 21L), (21L, 22L)).toDF("doc_a", "doc_b")
     val alt = Dedup.connectedComponentsAlternating(pairs)
@@ -284,33 +284,34 @@ class CrossCheckSpec extends TestBase {
     val empty = Dedup.connectedComponentsAlternating(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     assert(empty.columns.toSeq == Seq("doc_id", "cluster_id") && empty.count() == 0)
-    // ... and full equality against the min-label path on the REAL
-    // simhash near-dup graph from the test corpus
+    // ... and full equality against the public entry (the driver
+    // union-find at this size) on the REAL simhash near-dup graph from
+    // the test corpus
     val real = Dedup.simhashPairs(WarehouseSim.read(spark, sfDir, "documents"))
       .select("doc_a", "doc_b").localCheckpoint()
     val a = Dedup.connectedComponentsAlternating(real)
       .as[(Long, Long)].collect().toMap
     val m = Dedup.connectedComponents(real)
       .as[(Long, Long)].collect().toMap
-    assert(a == m, s"alternating and min-label labelings differ: " +
+    assert(a == m, s"alternating and public labelings differ: " +
       s"${(a.toSet diff m.toSet).take(5)} / ${(m.toSet diff a.toSet).take(5)}")
   }
 
-  test("pathological chain: min-label at its round budget refuses; alternating converges") {
+  test("pathological chain: alternating refuses at a too-small round budget") {
     import spark.implicits._
-    // a 600-node path graph — diameter 599. Min-label with pointer
-    // jumping halves the hop distance per round, so a tight budget of 3
-    // rounds cannot converge and must fail LOUDLY (silent truncation
-    // would split one component into many). The alternating algorithm's
-    // round count is diameter-independent: the same budget suffices.
-    // 599 edges is under LocalCcMaxEdges, so the public call labels on the
-    // driver, which has no rounds; the budget applies to the distributed
-    // loop, called directly.
+    // a 600-node path graph — diameter 599. Large-star/small-star takes
+    // about log2(600) rounds on it, so a budget of 3 rounds cannot
+    // converge and must fail LOUDLY (silent truncation would split one
+    // component into many); a budget of 15 suffices. 599 edges is under
+    // LocalCcMaxEdges, so the public call labels on the driver, which has
+    // no rounds; the budget applies to the distributed labeler, called
+    // directly.
     val chain = (1L until 600L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val refused = intercept[IllegalStateException] {
-      Dedup.connectedComponentsDistributed(chain, maxIter = 3)
+      Dedup.connectedComponentsAlternating(chain, maxIter = 3)
     }
     assert(refused.getMessage.contains("did not converge"))
+    assert(Dedup.lastCcRounds == 3)
     val local = Dedup.connectedComponents(chain, maxIter = 3)
       .as[(Long, Long)].collect()
     assert(local.length == 600 && local.forall(_._2 == 1L),
@@ -660,9 +661,7 @@ class CrossCheckSpec extends TestBase {
     val real = Dedup.simhashPairs(WarehouseSim.read(spark, sfDir, "documents"))
       .select("doc_a", "doc_b").localCheckpoint()
     // default mode (executor-local checkpoints). The public CC labels this
-    // graph on the driver, so the checkpointing loop is called directly.
-    val ccLocal = Dedup.connectedComponentsDistributed(real)
-      .as[(Long, Long)].collect().toMap
+    // graph on the driver, so the checkpointing labeler is called directly.
     val altLocal = Dedup.connectedComponentsAlternating(real)
       .as[(Long, Long)].collect().toMap
     val rankLocal = Dedup.graphRank(real)
@@ -671,13 +670,10 @@ class CrossCheckSpec extends TestBase {
       .createTempDirectory("graft_ckpt").toString
     try {
       spark.conf.set("spark.graft.checkpointDir", dir)
-      val ccRel = Dedup.connectedComponentsDistributed(real)
-        .as[(Long, Long)].collect().toMap
       val altRel = Dedup.connectedComponentsAlternating(real)
         .as[(Long, Long)].collect().toMap
       val rankRel = Dedup.graphRank(real)
         .as[(Long, Long)].collect().toMap
-      assert(ccRel == ccLocal, "min-label CC labels diverge across modes")
       assert(altRel == altLocal, "alternating CC labels diverge across modes")
       assert(rankRel == rankLocal, "graphRank diverges across modes")
       // the reliable mode must actually have written checkpoint state

@@ -6,7 +6,7 @@ import graft.incremental.{StateStore, Watermark}
 import graft.model.{JobState, JobStatus}
 import graft.observability.{Metrics, StatsdReporter, StatusServer}
 
-/** Counters via observe + listener, job-lag metric from the state table. */
+/** Counters via observe + listener, job lag from the state table via `/status`. */
 class ObservabilitySpec extends TestBase {
 
   test("observe counters flow through the listener") {
@@ -25,19 +25,30 @@ class ObservabilitySpec extends TestBase {
   test("job lag from the state table + alert buckets") {
     val dir = tmpDir("lag-state")
     val state = new StateStore(spark, dir.toUri.toString + "jobs")
-    val now = 1700000000000L
+    val now = System.currentTimeMillis()
     state.append(Seq(
       JobState(1, now - 4000_000L, "COPY_TABLE", JobStatus.Pending,
         "db", "t1", Seq.empty, None, None, None, Map.empty),
       JobState(2, now - 1000_000L, "COPY_TABLE", JobStatus.Successful,
         "db", "t2", Seq.empty, None, None, None, Map.empty)))
-    // oldest non-terminal job is 4000s old
-    assert(Metrics.jobLagSeconds(state, now).contains(4000L))
-    assert(Metrics.lagBucket(4000L) == 2) // past 1800 and 3600
-    assert(Metrics.lagBucket(100L) == 0)
-    // once it completes, no lag
-    state.appendStatus(Seq(state.restoreRunnable().head), JobStatus.Successful)
-    assert(Metrics.jobLagSeconds(state, now).isEmpty)
+    val srv = new StatusServer(state, new Watermark(dir.toUri.toString + "watermark"))
+    val port = srv.start()
+    try {
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def status() = mapper.readTree(
+        new java.net.URI(s"http://localhost:$port/status").toURL.openStream())
+      // oldest non-terminal job is 4000s old (plus the time this test took)
+      val lagged = status()
+      val lag = lagged.get("lagSeconds").asLong
+      assert(lag >= 4000L && lag < 4120L, s"lagSeconds $lag")
+      assert(lagged.get("lagBucket").asInt == 2) // past 1800 and 3600
+      assert(Metrics.lagBucket(4000L) == 2)
+      assert(Metrics.lagBucket(100L) == 0)
+      // once it completes, no lag
+      state.appendStatus(Seq(state.restoreRunnable().head), JobStatus.Successful)
+      val done = status()
+      assert(!done.has("lagSeconds") && !done.has("lagBucket"), s"$done")
+    } finally srv.stop()
   }
 
   test("status endpoint serves job counts, watermark, and health over HTTP") {
