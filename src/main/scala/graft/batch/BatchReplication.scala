@@ -66,17 +66,16 @@ object BatchReplication {
     def allowed(db: String, table: String): Boolean =
       allow.forall(_.contains((db, table)))
 
-    val srcTables = CatalogSnapshot.tables(spark, cfg.srcConnector)
-      .filter((t: TableMeta) => !blacklisted(t.db, t.table) && allowed(t.db, t.table))
-    val destTables = CatalogSnapshot.tables(spark, cfg.destConnector)
-      .filter((t: TableMeta) => !blacklisted(t.db, t.table) && allowed(t.db, t.table))
-    val srcParts = CatalogSnapshot.partitions(spark, cfg.srcConnector)
-      .filter((p: PartitionMeta) => !blacklisted(p.db, p.table) && allowed(p.db, p.table))
-    val destParts = CatalogSnapshot.partitions(spark, cfg.destConnector)
-      .filter((p: PartitionMeta) => !blacklisted(p.db, p.table) && allowed(p.db, p.table))
+    // partitions are listed from the filtered table snapshots, so no
+    // catalog call reaches a blacklisted or unlisted table's partitions
+    def snapshot(c: CatalogConnector): (Dataset[TableMeta], Dataset[PartitionMeta]) = {
+      val tables = CatalogSnapshot.tables(spark, c)
+        .filter((t: TableMeta) => !blacklisted(t.db, t.table) && allowed(t.db, t.table))
+      (tables, CatalogSnapshot.partitionsOf(spark, c, tables))
+    }
 
     val actions = graft.planner.DiffPlanner.plan(
-      (srcTables, srcParts), (destTables, destParts))
+      snapshot(cfg.srcConnector), snapshot(cfg.destConnector))
     actions.write.mode("overwrite").parquet(cfg.planDir)
     spark.read.parquet(cfg.planDir).as[Action]
   }

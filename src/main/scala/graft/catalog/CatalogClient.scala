@@ -133,9 +133,17 @@ object CatalogSnapshot {
   }
 
   def partitions(spark: SparkSession, connector: CatalogConnector,
-      parallelism: Int = 16): Dataset[PartitionMeta] = {
+      parallelism: Int = 16): Dataset[PartitionMeta] =
+    partitionsOf(spark, connector, tables(spark, connector, parallelism),
+      parallelism)
+
+  /** The partitions of `tables` only: a caller that has already filtered
+    * its table snapshot (blacklist, allowlist) lists no partition of a
+    * table it dropped. */
+  def partitionsOf(spark: SparkSession, connector: CatalogConnector,
+      tables: Dataset[TableMeta], parallelism: Int = 16): Dataset[PartitionMeta] = {
     import spark.implicits._
-    val specs = tables(spark, connector, parallelism)
+    val specs = tables
       .filter((t: TableMeta) => t.isPartitioned)
       .map(t => (t.db, t.table))
     if (!connector.executorSafe) {

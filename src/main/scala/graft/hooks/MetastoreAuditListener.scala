@@ -17,9 +17,9 @@ import graft.model.PartitionName
  * MetastoreAuditLogListener.java:80-311`): DDL arriving over the Thrift
  * API from ANY client fires these events, so API-originated mutations
  * are audited at the source of truth rather than at one cooperating
- * client (that client-side shape is [[graft.incremental.
- * AuditLoggingCatalog]] with `thriftOrigin = true`; both produce the
- * same entry vocabulary, which [[graft.incremental.JobFactory]] routes).
+ * client. This is the only emitter of `THRIFT_*` entries; the SQL-hook
+ * vocabulary comes from [[graft.incremental.AuditLoggingCatalog]], and
+ * [[graft.incremental.JobFactory]] routes both.
  *
  * Deploy by configuring the metastore with
  * `hive.metastore.event.listeners=graft.hooks.MetastoreAuditListener`

@@ -15,19 +15,14 @@ import graft.model.{AuditObject, PartitionMeta, TableMeta}
  * loop of the reference, with the file directory standing in for the
  * MySQL audit table.
  *
- * `thriftOrigin = true` is the METASTORE-LISTENER shape (reference
- * `hive-hooks/.../MetastoreAuditLogListener.java`): DDL arriving through
- * the metastore API directly, not through a SQL CLI. Those entries carry
- * `THRIFT_*` command types and the literal command text `THRIFT_API`
- * (`MetastoreAuditLogListener.java:311`) — there IS no SQL to log — and
- * an API-side exchange surfaces as the THRIFT_DROP_PARTITION +
- * THRIFT_ADD_PARTITION event pair the metastore actually fires, not as
- * an EXCHANGEPARTITION SQL entry. [[JobFactory]] routes both vocabularies.
+ * This is the SQL-hook shape (reference `CliAuditLogHook`): entries carry
+ * Hive's command types and SQL text. DDL arriving through the metastore
+ * API is audited by [[graft.hooks.MetastoreAuditListener]] instead, with
+ * `THRIFT_*` command types; [[JobFactory]] routes both vocabularies.
  */
 final class AuditLoggingCatalog(underlying: CatalogClient, auditDir: String,
-    startId: Long = 0L, thriftOrigin: Boolean = false) extends CatalogClient {
+    startId: Long = 0L) extends CatalogClient {
 
-  private val ThriftCommand = AuditEntryWriter.ThriftCommand
   private val writer = new AuditEntryWriter(auditDir, startId)
 
   private def emit(commandType: String, outputTables: Seq[String] = Seq.empty,
@@ -42,8 +37,7 @@ final class AuditLoggingCatalog(underlying: CatalogClient, auditDir: String,
   // ---- mutations emit audit entries --------------------------------------
   def createDatabase(db: String): Unit = {
     underlying.createDatabase(db)
-    if (thriftOrigin) emit("THRIFT_CREATE_DATABASE", command = Some(ThriftCommand))
-    else emit("CREATEDATABASE", command = Some(s"CREATE DATABASE $db"))
+    emit("CREATEDATABASE", command = Some(s"CREATE DATABASE $db"))
   }
   private def tableObj(t: TableMeta): AuditObject = AuditEntryWriter.tableObj(t)
   private def partObj(p: PartitionMeta): AuditObject = AuditEntryWriter.partObj(p)
@@ -58,25 +52,14 @@ final class AuditLoggingCatalog(underlying: CatalogClient, auditDir: String,
 
   def createTable(t: TableMeta): Unit = {
     underlying.createTable(t)
-    if (thriftOrigin)
-      emit("THRIFT_CREATE_TABLE", outputTables = Seq(s"${t.db}.${t.table}"),
-        objects = Seq(tableObj(t)), command = Some(ThriftCommand))
-    else
-      emit("CREATETABLE", outputTables = Seq(s"${t.db}.${t.table}"),
-        objects = Seq(tableObj(t)),
-        command = Some(s"CREATE TABLE ${t.db}.${t.table}"))
+    emit("CREATETABLE", outputTables = Seq(s"${t.db}.${t.table}"),
+      objects = Seq(tableObj(t)),
+      command = Some(s"CREATE TABLE ${t.db}.${t.table}"))
   }
   def alterTable(db: String, table: String, t: TableMeta): Unit = {
     underlying.alterTable(db, table, t)
     val renamed = db != t.db || table != t.table
-    if (thriftOrigin) {
-      // the listener logs ONE event type for every alter; a rename is
-      // detected downstream by input-name ≠ output-name
-      // (`ReplicationJobFactory.java:599-607`) — renameFrom carries it
-      emit("THRIFT_ALTER_TABLE", outputTables = Seq(s"${t.db}.${t.table}"),
-        renameFrom = if (renamed) Some(s"$db.$table") else None,
-        objects = Seq(tableObj(t)), command = Some(ThriftCommand))
-    } else if (renamed) {
+    if (renamed) {
       emit("ALTERTABLE_RENAME", outputTables = Seq(s"${t.db}.${t.table}"),
         renameFrom = Some(s"$db.$table"), objects = Seq(tableObj(t)),
         command = Some(s"ALTER TABLE $db.$table RENAME TO ${t.db}.${t.table}"))
@@ -88,63 +71,38 @@ final class AuditLoggingCatalog(underlying: CatalogClient, auditDir: String,
   }
   def dropTable(db: String, table: String): Unit = {
     underlying.dropTable(db, table)
-    if (thriftOrigin)
-      emit("THRIFT_DROP_TABLE", outputTables = Seq(s"$db.$table"),
-        command = Some(ThriftCommand))
-    else
-      emit("DROPTABLE", outputTables = Seq(s"$db.$table"),
-        command = Some(s"DROP TABLE $db.$table"))
+    emit("DROPTABLE", outputTables = Seq(s"$db.$table"),
+      command = Some(s"DROP TABLE $db.$table"))
   }
   def addPartition(p: PartitionMeta): Unit = {
     underlying.addPartition(p)
-    if (thriftOrigin)
-      emit("THRIFT_ADD_PARTITION",
-        outputPartitions = Seq(s"${p.db}.${p.table}/${p.partName}"),
-        objects = Seq(partObj(p)), command = Some(ThriftCommand))
-    else
-      emit("QUERY", outputPartitions = Seq(s"${p.db}.${p.table}/${p.partName}"),
-        objects = Seq(partObj(p)),
-        command = Some(s"ALTER TABLE ${p.db}.${p.table} " +
-          s"ADD PARTITION (${specSql(p.partName)})"))
+    emit("QUERY", outputPartitions = Seq(s"${p.db}.${p.table}/${p.partName}"),
+      objects = Seq(partObj(p)),
+      command = Some(s"ALTER TABLE ${p.db}.${p.table} " +
+        s"ADD PARTITION (${specSql(p.partName)})"))
   }
   def alterPartition(p: PartitionMeta): Unit = {
     underlying.alterPartition(p)
-    if (thriftOrigin)
-      emit("THRIFT_ALTER_PARTITION",
-        outputPartitions = Seq(s"${p.db}.${p.table}/${p.partName}"),
-        objects = Seq(partObj(p)), command = Some(ThriftCommand))
-    else
-      emit("QUERY", outputPartitions = Seq(s"${p.db}.${p.table}/${p.partName}"),
-        objects = Seq(partObj(p)),
-        command = Some(s"INSERT OVERWRITE TABLE ${p.db}.${p.table} " +
-          s"PARTITION (${specSql(p.partName)})"))
+    emit("QUERY", outputPartitions = Seq(s"${p.db}.${p.table}/${p.partName}"),
+      objects = Seq(partObj(p)),
+      command = Some(s"INSERT OVERWRITE TABLE ${p.db}.${p.table} " +
+        s"PARTITION (${specSql(p.partName)})"))
   }
   def dropPartition(db: String, table: String, partName: String): Unit = {
     underlying.dropPartition(db, table, partName)
-    if (thriftOrigin)
-      emit("THRIFT_DROP_PARTITION",
-        outputPartitions = Seq(s"$db.$table/$partName"),
-        command = Some(ThriftCommand))
-    else
-      emit("ALTERTABLE_DROPPARTS",
-        outputPartitions = Seq(s"$db.$table/$partName"),
-        command = Some(s"ALTER TABLE $db.$table DROP PARTITION (${specSql(partName)})"))
+    emit("ALTERTABLE_DROPPARTS",
+      outputPartitions = Seq(s"$db.$table/$partName"),
+      command = Some(s"ALTER TABLE $db.$table DROP PARTITION (${specSql(partName)})"))
   }
   def renamePartition(db: String, table: String, from: String,
       to: PartitionMeta): Unit = {
     underlying.renamePartition(db, table, from, to)
-    if (thriftOrigin)
-      emit("THRIFT_ALTER_PARTITION",
-        outputPartitions = Seq(s"$db.$table/${to.partName}"),
-        renameFrom = Some(s"$db.$table/$from"),
-        objects = Seq(partObj(to)), command = Some(ThriftCommand))
-    else
-      emit("ALTERTABLE_RENAMEPART",
-        outputPartitions = Seq(s"$db.$table/${to.partName}"),
-        renameFrom = Some(s"$db.$table/$from"),
-        objects = Seq(partObj(to)),
-        command = Some(s"ALTER TABLE $db.$table PARTITION (${specSql(from)}) " +
-          s"RENAME TO PARTITION (${specSql(to.partName)})"))
+    emit("ALTERTABLE_RENAMEPART",
+      outputPartitions = Seq(s"$db.$table/${to.partName}"),
+      renameFrom = Some(s"$db.$table/$from"),
+      objects = Seq(partObj(to)),
+      command = Some(s"ALTER TABLE $db.$table PARTITION (${specSql(from)}) " +
+        s"RENAME TO PARTITION (${specSql(to.partName)})"))
   }
 
   /** HIVE-12865 exchange: moves the partition out of `fromDb.fromTable`
@@ -158,23 +116,11 @@ final class AuditLoggingCatalog(underlying: CatalogClient, auditDir: String,
       to: PartitionMeta): Unit = {
     underlying.dropPartition(fromDb, fromTable, to.partName)
     underlying.addPartition(to)
-    if (thriftOrigin) {
-      // an API exchange reaches the listener as the metastore's underlying
-      // drop+add event pair — there is no EXCHANGEPARTITION thrift event,
-      // and no SQL to parse; each half replicates on its own
-      emit("THRIFT_DROP_PARTITION",
-        outputPartitions = Seq(s"$fromDb.$fromTable/${to.partName}"),
-        command = Some(ThriftCommand))
-      emit("THRIFT_ADD_PARTITION",
-        outputPartitions = Seq(s"${to.db}.${to.table}/${to.partName}"),
-        objects = Seq(partObj(to)), command = Some(ThriftCommand))
-    } else {
-      emit("ALTERTABLE_EXCHANGEPARTITION",
-        command = Some(s"ALTER TABLE ${to.db}.${to.table} " +
-          s"EXCHANGE PARTITION (${specSql(to.partName)}) " +
-          s"WITH TABLE $fromDb.$fromTable"),
-        referenceTables = Seq(s"$fromDb.$fromTable"))
-    }
+    emit("ALTERTABLE_EXCHANGEPARTITION",
+      command = Some(s"ALTER TABLE ${to.db}.${to.table} " +
+        s"EXCHANGE PARTITION (${specSql(to.partName)}) " +
+        s"WITH TABLE $fromDb.$fromTable"),
+      referenceTables = Seq(s"$fromDb.$fromTable"))
   }
 
   // ---- reads pass through -------------------------------------------------

@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.catalog.CatalogConnector
 import graft.model._
+import graft.sources.AuditLogJdbc
 import graft.tasks.{TaskContext, Tasks}
 
 /**
@@ -235,14 +236,16 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
     case (j, s) => j.copy(status = s)
   }
 
-  /** One JDBC poll: read the next id-keyed page after the watermark,
+  /** One JDBC poll: read the next id-keyed page after the watermark
+    * ([[graft.sources.AuditLogJdbc.fetchPage]], plain JDBC on the driver),
     * process it, advance the watermark to the page's max id (so pages of
     * entirely-filtered entries still make progress). Returns entries read.
-    * The per-poll driver materialization is O(pageSize) by construction —
-    * the reference's own fetch shape (`AuditLogReader.java:199-254`). */
-  def pollJdbc(source: JdbcAuditSource): Int = {
+    * A page is O(pageSize) rows by construction — the reference's own
+    * fetch shape (`AuditLogReader.java:199-254`) — so a poll starts no
+    * Spark job of its own. */
+  def pollJdbc(reader: AuditLogJdbc.Settings): Int = {
     val after = watermark.get().getOrElse(0L)
-    val entries = source.nextPage(after).collect().toSeq
+    val entries = AuditLogJdbc.fetchPage(reader, after)
     if (entries.isEmpty) return 0
     processPage(entries)
     watermark.set(math.max(entries.map(_.id).max, after))
@@ -254,12 +257,12 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
     * `ReplicationServer.java:443-457`; callers wanting that loop wrap this
     * in their own scheduler). Watermark semantics survive restarts — a new
     * server over the same watermark path resumes after the last page. */
-  def drainJdbc(source: JdbcAuditSource, maxPolls: Int = Int.MaxValue): Int = {
+  def drainJdbc(reader: AuditLogJdbc.Settings, maxPolls: Int = Int.MaxValue): Int = {
     var total = 0
     var polls = 0
     var got = -1
     while (got != 0 && polls < maxPolls) {
-      got = pollJdbc(source)
+      got = pollJdbc(reader)
       total += got
       polls += 1
     }
@@ -267,7 +270,8 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
   }
 
   /** Structured Streaming entry over the native JDBC micro-batch source
-    * ([[graft.sources.AuditLogJdbcSource]]): audit ids are the stream
+    * ([[graft.sources.AuditLogJdbcSource]], reading through the same
+    * [[graft.sources.AuditLogJdbc]] as [[pollJdbc]]): audit ids are the stream
     * offsets, Spark's checkpoint commit log replaces the hand-rolled
     * watermark for restart positioning (ST1+ST2 in their native Spark
     * shape), and admission control caps ids per trigger (ST3). */
@@ -293,7 +297,8 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
 
   /** Structured Streaming entry: tail a directory of audit-entry JSON
     * (the file-source stand-in for the JDBC audit tail ST1; a MySQL
-    * deployment swaps in [[JdbcAuditSource]] behind the same foreachBatch).
+    * deployment tails the audit table with [[startJdbcStream]] or
+    * [[drainJdbc]] instead, into the same batch processing).
     *
     * ST3 backpressure: `maxFilesPerTrigger` = maxJobsPerBatch caps
     * source-side admission (one file per audit entry), so a flood of

@@ -11,9 +11,11 @@ import graft.model.TaskType
  *
  * Each function re-expresses one operator family from SURVEY.md §2 as a
  * declarative Spark plan (reference implements these as hand-rolled MR
- * mappers/reducers or driver loops). They are used both by the query
- * surface ([[graft.SparkEntry]]) over simulated inventories and by the real
- * replication planner over catalog snapshots.
+ * mappers/reducers or driver loops). Only the query surface
+ * ([[graft.SparkEntry]], `graft.queries`) calls them, over simulated
+ * inventories; the replication engine plans with its own typed diffs
+ * ([[graft.planner.DiffPlanner]]) and routes audit entries with
+ * [[graft.incremental.JobFactory]].
  *
  * Scale notes: all diffs are key-partitioned shuffles on their join keys —
  * no driver-side collection anywhere; small dimension sides should be

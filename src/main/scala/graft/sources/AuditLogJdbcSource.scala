@@ -53,94 +53,130 @@ class AuditLogJdbcSource extends TableProvider with DataSourceRegister {
     new AuditLogJdbcTable(properties.asScala.toMap)
 }
 
+/**
+ * The one audit-log reader (S6/S7/J6/A6, reference `incremental/auditlog/
+ * AuditLogReader.java:199-412`); both JDBC tails read through it. The
+ * driver-side poll loop ([[graft.incremental.IncrementalServer.pollJdbc]])
+ * fetches one page per poll with [[fetchPage]]; the DSv2 stream above
+ * fetches one id slice per partition reader with [[fetchRange]]. Both run
+ * the same id-ordered query with SHOW* filtered and group the 1:N
+ * `audit_objects` rows into one entry per id the same way; they differ
+ * only in the upper id bound and the row cap. A page is O(`pageSize`)
+ * rows, the reference's own fetch shape.
+ *
+ * The share-lock (`lockInShareMode`) is a MySQL-ism guarding against
+ * reading rows whose sibling `audit_objects` inserts haven't committed;
+ * without it the guarantee is that hooks insert objects before the log
+ * row (the reference's hook transaction order).
+ */
 object AuditLogJdbc {
   val schema: StructType = ExpressionEncoder[AuditLogEntry]().schema
 
-  final case class Options(
+  /** Reader settings, shared by the poll loop and the stream. Table names
+    * are spliced into SQL text (JDBC can't parameterize identifiers), so
+    * they must be plain possibly-qualified identifiers: a quote in a
+    * setting can't break out of the statement. */
+  final case class Settings(
       url: String,
-      auditTable: String,
-      objectsTable: String,
-      startId: Long,
-      pageSize: Int,
-      rowsPerTrigger: Long,
-      dropCommandTypes: Seq[String],
-      // MySQL-only read consistency (`lockInShareMode=true`): page reads
-      // append LOCK IN SHARE MODE so a half-committed hook transaction's
-      // rows are waited for instead of skipped past — the reference's
-      // AuditLogReader does the same (`auditlog/AuditLogReader.java:199-254`).
-      // Off by default: Derby/Postgres don't accept the syntax, and the
-      // file/embedded deployments don't need it (hooks write objects
-      // before the log row).
-      lockInShareMode: Boolean)
+      auditTable: String = "audit_log",
+      objectsTable: String = "audit_objects",
+      pageSize: Int = 200,
+      dropCommandTypes: Seq[String] =
+        Seq("SHOWTABLES", "SHOWPARTITIONS", "SWITCHDATABASE"),
+      // MySQL-only read consistency: page reads append LOCK IN SHARE MODE
+      // so a half-committed hook transaction's rows are waited for instead
+      // of skipped past, as the reference's AuditLogReader does. Off by
+      // default: Derby/Postgres don't accept the syntax, and the
+      // file/embedded deployments don't need it.
+      lockInShareMode: Boolean = false) {
+    requireIdent(auditTable, "auditTable")
+    requireIdent(objectsTable, "objectsTable")
+    require(pageSize > 0, s"graft-audit-jdbc: pageSize must be positive, got $pageSize")
+  }
 
-  // table names are spliced into SQL text (JDBC can't parameterize
-  // identifiers) — restrict them to plain possibly-qualified identifiers
-  // so a quote in an option value can't break out of the statement
   private val IdentPattern = "[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)*".r
-  private def validIdent(name: String, opt: String): String =
-    if (IdentPattern.pattern.matcher(name).matches()) name
-    else throw new IllegalArgumentException(
-      s"graft-audit-jdbc: option '$opt' must be a plain identifier, got '$name'")
+  private def requireIdent(name: String, opt: String): Unit =
+    if (!IdentPattern.pattern.matcher(name).matches())
+      throw new IllegalArgumentException(
+        s"graft-audit-jdbc: option '$opt' must be a plain identifier, got '$name'")
+
+  /** The stream's settings: the reader's, plus the id a fresh checkpoint
+    * starts after and the id span admitted per trigger. */
+  final case class Options(reader: Settings, startId: Long, rowsPerTrigger: Long)
 
   def options(raw: Map[String, String]): Options = {
     // normalize: getTable receives the ORIGINAL-case option map
     // (CaseInsensitiveStringMap.asCaseSensitiveMap), so `.option("startId",
     // ...)` arrives camelCase — lowercase-only lookups silently miss it
     val m = raw.map { case (k, v) => k.toLowerCase -> v }
+    val d = Settings(m.getOrElse("url",
+      throw new IllegalArgumentException("graft-audit-jdbc requires 'url'")))
     Options(
-      url = m.getOrElse("url",
-        throw new IllegalArgumentException("graft-audit-jdbc requires 'url'")),
-      auditTable = validIdent(m.getOrElse("audittable", "audit_log"), "auditTable"),
-      objectsTable = validIdent(m.getOrElse("objectstable", "audit_objects"), "objectsTable"),
-      startId = m.getOrElse("startid", "0").toLong,
-      pageSize = m.getOrElse("pagesize", "200").toInt,
-      rowsPerTrigger = m.getOrElse("rowspertrigger", "200").toLong,
-      dropCommandTypes = m.getOrElse("dropcommandtypes",
-        "SHOWTABLES,SHOWPARTITIONS,SWITCHDATABASE").split(',').toSeq,
-      lockInShareMode = m.getOrElse("lockinsharemode", "false").toBoolean)
+      d.copy(
+        auditTable = m.getOrElse("audittable", d.auditTable),
+        objectsTable = m.getOrElse("objectstable", d.objectsTable),
+        pageSize = m.get("pagesize").fold(d.pageSize)(_.toInt),
+        dropCommandTypes =
+          m.get("dropcommandtypes").fold(d.dropCommandTypes)(_.split(',').toSeq),
+        lockInShareMode = m.get("lockinsharemode").fold(d.lockInShareMode)(_.toBoolean)),
+      startId = m.get("startid").fold(0L)(_.toLong),
+      rowsPerTrigger = m.get("rowspertrigger").fold(200L)(_.toLong))
   }
 
-  def maxId(opts: Options): Long = {
-    val conn = DriverManager.getConnection(opts.url)
+  def maxId(r: Settings): Long = {
+    val conn = DriverManager.getConnection(r.url)
     try {
       val rs = conn.createStatement()
-        .executeQuery(s"SELECT MAX(id) FROM ${opts.auditTable}")
+        .executeQuery(s"SELECT MAX(id) FROM ${r.auditTable}")
       if (rs.next()) math.max(rs.getLong(1), 0L) else 0L
     } finally conn.close()
   }
 
-  /** Fetch + assemble entries in (lo, hi]; runs inside a partition reader. */
-  def fetchRange(opts: Options, lo: Long, hi: Long): Seq[AuditLogEntry] = {
-    val conn = DriverManager.getConnection(opts.url)
+  /** One poll: the first `pageSize` entries with `id > afterId`. */
+  def fetchPage(r: Settings, afterId: Long): Seq[AuditLogEntry] =
+    fetch(r, afterId, None, r.pageSize)
+
+  /** One stream slice: every entry in (lo, hi]; runs inside a partition reader. */
+  def fetchRange(r: Settings, lo: Long, hi: Long): Seq[AuditLogEntry] =
+    fetch(r, lo, Some(hi), maxRows = 0)
+
+  /** Entries with `id > lo` (and `<= hi` when given), SHOW* filtered, in id
+    * order, at most `maxRows` of them (0: no cap), each with its objects. */
+  private def fetch(r: Settings, lo: Long, hi: Option[Long],
+      maxRows: Int): Seq[AuditLogEntry] = {
+    val conn = DriverManager.getConnection(r.url)
     try {
-      // command types come from an option value — bind them as parameters
-      // rather than splicing quoted literals (table names are validated
+      // command types come from a setting — bind them as parameters rather
+      // than splicing quoted literals (table names are validated
       // identifiers; id bounds are longs, bound anyway for uniformity)
-      val drops = opts.dropCommandTypes.filter(_.nonEmpty)
+      val drops = r.dropCommandTypes.filter(_.nonEmpty)
+      val upper = if (hi.isDefined) " AND id <= ?" else ""
       val notIn =
         if (drops.isEmpty) ""
         else s" AND command_type NOT IN (${Seq.fill(drops.size)("?").mkString(", ")})"
-      val lock = if (opts.lockInShareMode) "\nLOCK IN SHARE MODE" else ""
+      val lock = if (r.lockInShareMode) "\nLOCK IN SHARE MODE" else ""
       val logPs = conn.prepareStatement(
         s"""SELECT id, create_time, command_type, command
-           |FROM ${opts.auditTable}
-           |WHERE id > ? AND id <= ?$notIn
+           |FROM ${r.auditTable}
+           |WHERE id > ?$upper$notIn
            |ORDER BY id""".stripMargin + lock)
+      logPs.setMaxRows(maxRows)
       logPs.setLong(1, lo)
-      logPs.setLong(2, hi)
-      drops.zipWithIndex.foreach { case (t, i) => logPs.setString(3 + i, t) }
+      hi.foreach(logPs.setLong(2, _))
+      val firstDrop = if (hi.isDefined) 3 else 2
+      drops.zipWithIndex.foreach { case (t, i) => logPs.setString(firstDrop + i, t) }
       val logRs = logPs.executeQuery()
-      val entries = mutable.LinkedHashMap.empty[Long, AuditLogEntry]
+      val heads = mutable.ArrayBuffer.empty[AuditLogEntry]
       while (logRs.next()) {
-        entries.put(logRs.getLong(1), AuditLogEntry(
+        heads += AuditLogEntry(
           id = logRs.getLong(1),
           createTime = logRs.getTimestamp(2),
           commandType = logRs.getString(3),
           command = logRs.getString(4),
           outputTables = Seq.empty, outputPartitions = Seq.empty,
-          renameFrom = None, referenceTables = Seq.empty))
+          renameFrom = None, referenceTables = Seq.empty)
       }
-      if (entries.isEmpty) return Seq.empty
+      if (heads.isEmpty) return Seq.empty
       // cheap, dialect-portable probe (getColumns with null filters would
       // scan the whole catalog every page): an empty-result SELECT either
       // parses or throws on the missing column. Runs BEFORE the objects
@@ -149,40 +185,43 @@ object AuditLogJdbc {
       val hasSerialized =
         try {
           conn.createStatement().executeQuery(
-            s"SELECT serialized FROM ${opts.objectsTable} WHERE 1 = 0")
+            s"SELECT serialized FROM ${r.objectsTable} WHERE 1 = 0")
           true
         } catch { case _: java.sql.SQLException => false }
       val serCol = if (hasSerialized) ", serialized" else ""
+      // bounded by the last fetched id: objects past it belong to no
+      // entry here (a filtered id, or the next page's)
       val objPs = conn.prepareStatement(
         s"""SELECT audit_log_id, category, object_type, name$serCol
-           |FROM ${opts.objectsTable}
-           |WHERE audit_log_id > ? AND audit_log_id <= ?""".stripMargin)
+           |FROM ${r.objectsTable}
+           |WHERE audit_log_id > ? AND audit_log_id <= ?
+           |ORDER BY audit_log_id, category, object_type, name""".stripMargin)
       objPs.setLong(1, lo)
-      objPs.setLong(2, hi)
+      objPs.setLong(2, heads.last.id)
       val objRs = objPs.executeQuery()
+      val objects = mutable.HashMap.empty[Long, mutable.ArrayBuffer[AuditObject]]
       while (objRs.next()) {
-        val id = objRs.getLong(1)
-        entries.get(id).foreach { e =>
-          val (cat, typ, name) =
-            (objRs.getString(2), objRs.getString(3), objRs.getString(4))
-          val serialized =
-            if (hasSerialized) Option(objRs.getString(5)).getOrElse("") else ""
-          val obj = AuditObject(cat, typ, name, serialized)
-          val updated = (cat, typ) match {
-            case ("OUTPUT", "TABLE") =>
-              e.copy(outputTables = (e.outputTables :+ name).sorted)
-            case ("OUTPUT", "PARTITION") =>
-              e.copy(outputPartitions = (e.outputPartitions :+ name).sorted)
-            case ("RENAME_FROM", _) => e.copy(renameFrom = Some(name))
-            case ("REFERENCE_TABLE", _) =>
-              e.copy(referenceTables = (e.referenceTables :+ name).sorted)
-            case _ => e
-          }
-          entries.put(id, updated.copy(objects = updated.objectsOrEmpty :+ obj))
-        }
+        val serialized =
+          if (hasSerialized) Option(objRs.getString(5)).getOrElse("") else ""
+        objects.getOrElseUpdate(objRs.getLong(1), mutable.ArrayBuffer.empty) +=
+          AuditObject(objRs.getString(2), objRs.getString(3), objRs.getString(4),
+            serialized)
       }
-      entries.values.toSeq
+      heads.map(e => withObjects(e, objects.getOrElse(e.id, Nil).toSeq)).toSeq
     } finally conn.close()
+  }
+
+  /** S7/A6: route an entry's objects into its write set, its rename source
+    * and its referenced tables; the objects ride along in key order. */
+  private def withObjects(e: AuditLogEntry, objs: Seq[AuditObject]): AuditLogEntry = {
+    def names(p: AuditObject => Boolean): Seq[String] =
+      objs.filter(p).flatMap(o => Option(o.name)).sorted
+    e.copy(
+      outputTables = names(o => o.category == "OUTPUT" && o.objectType == "TABLE"),
+      outputPartitions = names(o => o.category == "OUTPUT" && o.objectType == "PARTITION"),
+      renameFrom = names(_.category == "RENAME_FROM").lastOption,
+      referenceTables = names(_.category == "REFERENCE_TABLE"),
+      objects = objs)
   }
 }
 
@@ -223,7 +262,7 @@ final class AuditLogMicroBatchStream(opts: AuditLogJdbc.Options)
     * poll the same way, `ReplicationServer.java:203-204`). */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[IdOffset].id
-    val max = AuditLogJdbc.maxId(opts)
+    val max = AuditLogJdbc.maxId(opts.reader)
     val capped = limit match {
       case rl: ReadMaxRows => math.min(max, from + rl.maxRows())
       case _ => max
@@ -235,31 +274,31 @@ final class AuditLogMicroBatchStream(opts: AuditLogJdbc.Options)
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead")
 
-  override def reportLatestOffset(): Offset = IdOffset(AuditLogJdbc.maxId(opts))
+  override def reportLatestOffset(): Offset = IdOffset(AuditLogJdbc.maxId(opts.reader))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[IdOffset].id
     val hi = end.asInstanceOf[IdOffset].id
     if (hi <= lo) return Array.empty
-    (lo until hi by opts.pageSize.toLong)
-      .map(p => IdRangePartition(p, math.min(p + opts.pageSize, hi)): InputPartition)
+    (lo until hi by opts.reader.pageSize.toLong)
+      .map(p => IdRangePartition(p, math.min(p + opts.reader.pageSize, hi)): InputPartition)
       .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new AuditRangeReaderFactory(opts)
+    new AuditRangeReaderFactory(opts.reader)
 }
 
 final case class IdRangePartition(lo: Long, hi: Long) extends InputPartition
 
-final class AuditRangeReaderFactory(opts: AuditLogJdbc.Options)
+final class AuditRangeReaderFactory(reader: AuditLogJdbc.Settings)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val range = partition.asInstanceOf[IdRangePartition]
     new PartitionReader[InternalRow] {
       private val serializer =
         ExpressionEncoder[AuditLogEntry]().resolveAndBind().createSerializer()
-      private val it = AuditLogJdbc.fetchRange(opts, range.lo, range.hi).iterator
+      private val it = AuditLogJdbc.fetchRange(reader, range.lo, range.hi).iterator
       private var current: InternalRow = _
       override def next(): Boolean =
         if (it.hasNext) { current = serializer(it.next()).copy(); true }

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.batch.{BatchConfig, BatchReplication}
+import graft.catalog.{CatalogClient, CatalogConnector, InMemoryConnector}
 import graft.fs.CopyExec
 import graft.model._
 
@@ -112,12 +115,22 @@ class BatchReplicationSpec extends TestBase {
     val destConn = freshCatalog("bl-dest")
     srcConn.connect().createTable(unpartitionedTable("tmp_db", "scratch", srcWh))
     srcConn.connect().createTable(unpartitionedTable("prod_db", "keep", srcWh))
-    val cfg = BatchConfig(srcConn, destConn,
+    // a blacklisted partitioned table on both sides: its partitions must
+    // never be listed or fetched
+    val parted = partitionedTable("tmp_db", "parted", srcWh)
+    Seq(srcConn, destConn).foreach { c =>
+      c.connect().createTable(parted)
+      c.connect().addPartition(partition(parted, "ds=1/hr=1"))
+    }
+    val cfg = BatchConfig(PartitionReadLog(srcConn), PartitionReadLog(destConn),
       srcWh.toUri.toString.stripSuffix("/"), tmpDir("bl-dest-wh").toUri.toString,
       planDir = tmpDir("bl-plan").toUri.toString + "plan",
       blacklist = Seq(("^tmp_.*", ".*")), copyParallelism = 4)
     val actions = BatchReplication.plan(spark, cfg).collect()
     assert(actions.map(_.table).toSeq == Seq("keep"))
+    val reads = BatchReplicationSpec.partitionReads.asScala
+      .filter { case (id, _) => id == srcConn.id || id == destConn.id }
+    assert(!reads.exists(_._2.startsWith("tmp_db.")), s"partition reads: $reads")
   }
 
   test("S2: table-list file restricts the plan to listed tables") {
@@ -156,5 +169,40 @@ class BatchReplicationSpec extends TestBase {
       planDir = tmpDir("tldt-plan").toUri.toString + "plan", copyParallelism = 4)
     val actions = BatchReplication.plan(spark, cfg).collect()
     assert(actions.map(_.taskType).toSeq == Seq(TaskType.CopyUnpartitionedTable))
+  }
+}
+
+object BatchReplicationSpec {
+  /** (connector id, `db.table`) of every partition read a
+    * [[PartitionReadLog]] client served: global, because clients are
+    * opened inside Spark tasks. */
+  val partitionReads = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+}
+
+/** In-memory connector that logs which tables' partitions are read. */
+final case class PartitionReadLog(inner: InMemoryConnector) extends CatalogConnector {
+  def connect(): CatalogClient = new CatalogClient {
+    private val c = inner.connect()
+    private def logged[A](db: String, table: String)(read: => A): A = {
+      BatchReplicationSpec.partitionReads.add((inner.id, s"$db.$table"))
+      read
+    }
+    def listPartitionNames(db: String, table: String): Seq[String] =
+      logged(db, table)(c.listPartitionNames(db, table))
+    def getPartition(db: String, table: String, partName: String): Option[PartitionMeta] =
+      logged(db, table)(c.getPartition(db, table, partName))
+    def listDatabases(): Seq[String] = c.listDatabases()
+    def createDatabase(db: String): Unit = c.createDatabase(db)
+    def listTables(db: String): Seq[String] = c.listTables(db)
+    def getTable(db: String, table: String): Option[TableMeta] = c.getTable(db, table)
+    def createTable(t: TableMeta): Unit = c.createTable(t)
+    def alterTable(db: String, table: String, t: TableMeta): Unit = c.alterTable(db, table, t)
+    def dropTable(db: String, table: String): Unit = c.dropTable(db, table)
+    def addPartition(p: PartitionMeta): Unit = c.addPartition(p)
+    def alterPartition(p: PartitionMeta): Unit = c.alterPartition(p)
+    def dropPartition(db: String, table: String, partName: String): Unit =
+      c.dropPartition(db, table, partName)
+    def renamePartition(db: String, table: String, from: String, to: PartitionMeta): Unit =
+      c.renamePartition(db, table, from, to)
   }
 }

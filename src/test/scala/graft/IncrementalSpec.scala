@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.incremental._
 import graft.model._
+import graft.sources.AuditLogJdbc
 
 /** Incremental server: audit entries → jobs → ordered parallel execution →
   * converged dest; state-table recovery; per-key lock ordering —
@@ -380,49 +381,58 @@ class IncrementalSpec extends TestBase {
     val (server, srcConn, destConn, srcWh, _) = newServer("hooks-thrift")
     val auditDir = tmpDir("hooks-thrift-audit")
     val ckpt = tmpDir("hooks-thrift-ckpt")
-    // metastore-listener origin: THRIFT_* command types, command text
-    // THRIFT_API, exchange as the drop+add event pair
-    val hooked = new AuditLoggingCatalog(srcConn.connect(), auditDir.toString,
-      thriftOrigin = true)
-    val staging = partitionedTable("db7", "staging", srcWh)
-    val target = partitionedTable("db7", "target", srcWh)
-    hooked.createTable(staging)
-    hooked.createTable(target)
-    hooked.addPartition(partition(staging, "ds=1/hr=1"))
-    hooked.addPartition(partition(staging, "ds=1/hr=2"))
-    hooked.dropPartition("db7", "staging", "ds=1/hr=2")
-    val moved = partition(target, "ds=1/hr=1")
-    hooked.exchangePartition("db7", "staging", moved)
-
-    // every emitted entry is Thrift-shaped: THRIFT_* type, THRIFT_API text
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val nodes = java.nio.file.Files.list(auditDir).toArray.map(_.toString)
-      .sorted.map(f => mapper.readTree(new java.io.File(f)))
-    assert(nodes.nonEmpty)
-    nodes.foreach { n =>
-      assert(n.get("commandType").asText.startsWith("THRIFT_"), n)
-      assert(n.get("command").asText == "THRIFT_API", n)
-    }
-    // the exchange emitted the drop+add pair, not an EXCHANGEPARTITION SQL
-    assert(nodes.map(_.get("commandType").asText).takeRight(2).toSeq ==
-      Seq("THRIFT_DROP_PARTITION", "THRIFT_ADD_PARTITION"))
-
-    val q = server.start(auditDir.toUri.toString, ckpt.toUri.toString)
+    // metastore-listener origin: DDL over the Thrift wire to a metastore
+    // over the server's src catalog, audited by the real listener —
+    // THRIFT_* command types, command text THRIFT_API
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.set(graft.hooks.MetastoreAuditListener.DirKey, auditDir.toString)
+    val hms = new MockHmsServer(graft.catalog.InMemoryCatalog.get(srcConn.id),
+      Seq(new graft.hooks.MetastoreAuditListener(conf)))
     try {
-      q.processAllAvailable()
-      val dest = destConn.connect()
-      assert(dest.listPartitionNames("db7", "staging").isEmpty)
-      assert(dest.listPartitionNames("db7", "target") == Seq("ds=1/hr=1"))
-      val destP = dest.getPartition("db7", "target", "ds=1/hr=1").get
-      assert(graft.fs.CopyExec.equalDirs(spark, moved.location, destP.location))
+      val hooked = graft.catalog.ThriftHmsCatalogConnector("127.0.0.1", hms.port).connect()
+      val staging = partitionedTable("db7", "staging", srcWh)
+      val target = partitionedTable("db7", "target", srcWh)
+      hooked.createTable(staging)
+      hooked.createTable(target)
+      hooked.addPartition(partition(staging, "ds=1/hr=1"))
+      hooked.addPartition(partition(staging, "ds=1/hr=2"))
+      hooked.dropPartition("db7", "staging", "ds=1/hr=2")
+      // an API-side exchange reaches the metastore as a drop then an add:
+      // there is no exchange RPC, and no SQL to parse
+      val moved = partition(target, "ds=1/hr=1")
+      hooked.dropPartition("db7", "staging", moved.partName)
+      hooked.addPartition(moved)
 
-      // THRIFT_ALTER_TABLE with a name change routes as RENAME_TABLE
-      val renamed = target.copy(table = "target2")
-      hooked.alterTable("db7", "target", renamed)
-      q.processAllAvailable()
-      assert(dest.getTable("db7", "target").isEmpty)
-      assert(dest.getTable("db7", "target2").isDefined)
-    } finally q.stop()
+      // every emitted entry is Thrift-shaped: THRIFT_* type, THRIFT_API text
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val nodes = java.nio.file.Files.list(auditDir).toArray.map(_.toString)
+        .sorted.map(f => mapper.readTree(new java.io.File(f)))
+      assert(nodes.nonEmpty)
+      nodes.foreach { n =>
+        assert(n.get("commandType").asText.startsWith("THRIFT_"), n)
+        assert(n.get("command").asText == "THRIFT_API", n)
+      }
+      // the exchange emitted the drop+add pair, not an EXCHANGEPARTITION SQL
+      assert(nodes.map(_.get("commandType").asText).takeRight(2).toSeq ==
+        Seq("THRIFT_DROP_PARTITION", "THRIFT_ADD_PARTITION"))
+
+      val q = server.start(auditDir.toUri.toString, ckpt.toUri.toString)
+      try {
+        q.processAllAvailable()
+        val dest = destConn.connect()
+        assert(dest.listPartitionNames("db7", "staging").isEmpty)
+        assert(dest.listPartitionNames("db7", "target") == Seq("ds=1/hr=1"))
+        val destP = dest.getPartition("db7", "target", "ds=1/hr=1").get
+        assert(graft.fs.CopyExec.equalDirs(spark, moved.location, destP.location))
+
+        // THRIFT_ALTER_TABLE with a name change routes as RENAME_TABLE
+        val renamed = target.copy(table = "target2")
+        hooked.alterTable("db7", "target", renamed)
+        q.processAllAvailable()
+        assert(dest.getTable("db7", "target").isEmpty)
+        assert(dest.getTable("db7", "target2").isDefined)
+      } finally q.stop()
+    } finally hms.stop()
   }
 
   test("unparseable exchange command surfaces as NOT_COMPLETABLE, not a silent skip") {
@@ -604,8 +614,7 @@ class IncrementalSpec extends TestBase {
     insertEntry(2, "SHOWTABLES", Seq.empty) // filtered by the pushed-down WHERE
     insertEntry(3, "CREATETABLE", Seq(("OUTPUT", "TABLE", "db1.t_b")))
 
-    val source = new JdbcAuditSource(spark,
-      JdbcSourceConfig(url, pageSize = 1)) // force paging: one entry per poll
+    val source = AuditLogJdbc.Settings(url, pageSize = 1) // force paging: one entry per poll
     // SHOWTABLES (id 2) never leaves the database — 2 entries total
     assert(server.drainJdbc(source) == 2)
     val dest = destConn.connect()
@@ -620,7 +629,49 @@ class IncrementalSpec extends TestBase {
     assert(server2.drainJdbc(source) == 1) // only the new entry
     assert(dest.getTable("db1", "t_c").isDefined)
     assert(server2.watermark.get().contains(4L))
+
+    // a poll is a driver-side JDBC page fetch: it starts no Spark job
+    src.createTable(unpartitionedTable("db1", "t_d", srcWh))
+    insertEntry(5, "CREATETABLE", Seq(("OUTPUT", "TABLE", "db1.t_d")))
+    val (polled, jobs) = jobsStartedBy(server2.pollJdbc(source))
+    assert(polled == 1 && jobs == 0, s"entries $polled, Spark jobs $jobs")
+    assert(dest.getTable("db1", "t_d").isDefined)
     conn.close()
+
+    // table names are spliced into SQL: the poll path's settings reject a
+    // non-identifier exactly as the stream's options do
+    intercept[IllegalArgumentException](
+      AuditLogJdbc.Settings(url, auditTable = "audit_log; DROP"))
+    intercept[IllegalArgumentException](
+      AuditLogJdbc.Settings(url, objectsTable = "audit_objects'--"))
+  }
+
+  test("audit reader: page and range fetches assemble entries alike, objects in key order") {
+    val url = s"jdbc:derby:${tmpDir("jdbc-order-db").resolve("db")};create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    val st = conn.createStatement()
+    st.executeUpdate("CREATE TABLE audit_log (id BIGINT PRIMARY KEY, " +
+      "create_time TIMESTAMP, command_type VARCHAR(64), command VARCHAR(4000))")
+    st.executeUpdate("CREATE TABLE audit_objects (audit_log_id BIGINT, " +
+      "category VARCHAR(32), object_type VARCHAR(32), name VARCHAR(256))")
+    // one entry's objects inserted out of key order
+    Seq(("OUTPUT", "TABLE", "db1.t_out"), ("INPUT", "TABLE", "db1.t_in"),
+        ("OUTPUT", "PARTITION", "db1.t_out/ds=1")).foreach { case (cat, typ, name) =>
+      st.executeUpdate(s"INSERT INTO audit_objects VALUES (1, '$cat', '$typ', '$name')")
+    }
+    st.executeUpdate("INSERT INTO audit_log VALUES (1, " +
+      "TIMESTAMP('2024-01-01 00:00:00'), 'QUERY', 'cmd-1')")
+    conn.close()
+
+    val reader = AuditLogJdbc.Settings(url)
+    val page = AuditLogJdbc.fetchPage(reader, 0L)
+    assert(page == AuditLogJdbc.fetchRange(reader, 0L, 1L))
+    val e = page.head
+    assert(e.objects.map(o => (o.category, o.objectType, o.name)) == Seq(
+      ("INPUT", "TABLE", "db1.t_in"), ("OUTPUT", "PARTITION", "db1.t_out/ds=1"),
+      ("OUTPUT", "TABLE", "db1.t_out")))
+    assert(e.outputTables == Seq("db1.t_out"))
+    assert(e.outputPartitions == Seq("db1.t_out/ds=1"))
   }
 
   test("DSv2 source: JDBC micro-batch stream with id offsets and checkpoint restart") {
