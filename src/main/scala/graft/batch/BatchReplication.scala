@@ -1,5 +1,7 @@
 package graft.batch
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +36,14 @@ final case class BatchConfig(
     verifyChecksum: Boolean = false)
 
 final case class BatchStats(
-    planned: Long, copies: Long, drops: Long, commitFailures: Long)
+    planned: Long, copies: Long, drops: Long, commitFailures: Long) {
+  def +(o: BatchStats): BatchStats = BatchStats(planned + o.planned,
+    copies + o.copies, drops + o.drops, commitFailures + o.commitFailures)
+}
+
+object BatchStats {
+  val Zero: BatchStats = BatchStats(0, 0, 0, 0)
+}
 
 object BatchReplication {
 
@@ -127,62 +136,45 @@ object BatchReplication {
     case _ => ()
   }
 
+  /** Commit a run of plan actions through one pair of catalog connections
+    * and count them; a failed commit is counted, never rethrown. */
+  private def commitAll(cfg: BatchConfig, actions: Iterator[Action]): BatchStats = {
+    val src = cfg.srcConnector.connect()
+    val ctx = TaskContext.metadataOnly(cfg.destConnector.connect(),
+      cfg.srcFsRoot, cfg.destFsRoot)
+    actions.foldLeft(BatchStats.Zero) { (stats, a) =>
+      val failed = try { commitOne(ctx, src, a); 0L }
+                   catch { case _: Throwable => 1L }
+      stats + BatchStats(1,
+        if (a.taskType.startsWith("COPY")) 1 else 0,
+        if (a.taskType.startsWith("DROP")) 1 else 0, failed)
+    }
+  }
+
   /** Stage 3: commit metadata per action (T1-T7 dispatch, reference
     * `Stage3CommitChangeMapper.java:72-168` — 150 commit mappers). The plan
     * is hash-partitioned by (db, table) so each table's actions land in one
     * partition, sorted tables-before-partitions within it (a partition add
     * requires its table); cross-table commits run in parallel on executors
-    * with one catalog connection per partition. The driver sees only the
-    * per-task-type rollup, never O(actions) rows. */
+    * with one catalog connection per partition. The driver sees one
+    * [[BatchStats]] per partition, never O(actions) rows, and folds them
+    * from zero: an empty plan (a converged warehouse) may scan no
+    * partition at all once AQE drops the empty shuffle. */
   def commit(spark: SparkSession, cfg: BatchConfig): BatchStats = {
     import spark.implicits._
-    val (srcConn, destConn) = (cfg.srcConnector, cfg.destConnector)
-    val (srcRoot, destRoot) = (cfg.srcFsRoot, cfg.destFsRoot)
     val sorted = spark.read.parquet(cfg.planDir).as[Action]
       .repartition(cfg.copyParallelism, col("db"), col("table"))
       .sortWithinPartitions(col("db"), col("table"),
         col("partName").isNotNull, col("partName"))
-    if (!srcConn.executorSafe || !destConn.executorSafe) {
+    if (!cfg.srcConnector.executorSafe || !cfg.destConnector.executorSafe)
       // a session-bound catalog is reachable only from the driver: stream
       // the plan through one driver-side pass (toLocalIterator — bounded
-      // memory, one partition at a time) with incremental counters; a
-      // cluster deployment plugs in an executor-safe Thrift-style
-      // connector and takes the distributed path below
-      val src = srcConn.connect()
-      val ctx = TaskContext.metadataOnly(destConn.connect(), srcRoot, destRoot)
-      var (planned, copies, drops, failures) = (0L, 0L, 0L, 0L)
-      val it = sorted.toLocalIterator()
-      while (it.hasNext) {
-        val a = it.next()
-        planned += 1
-        if (a.taskType.startsWith("COPY")) copies += 1
-        if (a.taskType.startsWith("DROP")) drops += 1
-        try commitOne(ctx, src, a)
-        catch { case _: Throwable => failures += 1 }
-      }
-      return BatchStats(planned, copies, drops, failures)
-    }
-    val results = sorted.mapPartitions { it =>
-        val src = srcConn.connect()
-        val ctx = TaskContext.metadataOnly(destConn.connect(), srcRoot, destRoot)
-        it.map { a =>
-          val ok = try { commitOne(ctx, src, a); true }
-                   catch { case _: Throwable => false }
-          (a.taskType, ok)
-        }
-      }
-      .toDF("taskType", "ok")
-      .agg(
-        count(lit(1)),
-        count(when(col("taskType").startsWith("COPY"), 1)),
-        count(when(col("taskType").startsWith("DROP"), 1)),
-        count(when(!col("ok"), 1)))
-      .head()
-    BatchStats(
-      planned = results.getLong(0),
-      copies = results.getLong(1),
-      drops = results.getLong(2),
-      commitFailures = results.getLong(3))
+      // memory, one partition at a time); a cluster deployment plugs in an
+      // executor-safe Thrift-style connector and takes the path below
+      commitAll(cfg, sorted.toLocalIterator().asScala)
+    else
+      sorted.mapPartitions(it => Iterator.single(commitAll(cfg, it)))
+        .collect().foldLeft(BatchStats.Zero)(_ + _)
   }
 
   /** Run all three stages (steps resumable individually). */

@@ -10,17 +10,21 @@ import graft.tasks.{TaskContext, Tasks}
 
 /**
  * Incremental replication server (SURVEY §2.9, §3.2): the reference's
- * `ReplicationServer.run` poll loop re-expressed as Structured Streaming.
+ * `ReplicationServer.run` loop. Pages of audit entries arrive from one of
+ * two tails: the JDBC poll loop ([[IncrementalServer.drainJdbc]], the
+ * reference's own shape, positioned by the [[Watermark]]) or a Structured
+ * Streaming tail over a directory of audit-entry files
+ * ([[IncrementalServer.start]], positioned by its checkpoint).
  *
- * Per micro-batch (`foreachBatch`), preserving the reference's
- * exactly-once-ish ordering (`ReplicationServer.java:460-504`):
- *   1. collect the page and plan its jobs on the driver ([[JobFactory]]);
+ * Per page, preserving the reference's exactly-once-ish ordering
+ * (`ReplicationServer.java:460-504`):
+ *   1. plan the page's jobs on the driver ([[JobFactory]]);
  *   2. persist them PENDING to the state log *before* execution;
  *   3. execute with per-key lock ordering ([[LockExecutor]], 20 workers);
  *   4. persist terminal statuses; advance the watermark last.
  * Steps 1, 2 and 4 start no Spark job: the state log ([[StateStore]]) is
  * written as driver-side files, as the reference plans in plain Java and
- * updates its job rows in place. Spark reads the audit stream and the
+ * updates its job rows in place. Spark reads the file stream and the
  * state log, and runs the copies that are too big for the driver.
  *
  * Replay after crash re-runs PENDING/RUNNING jobs; tasks are idempotent
@@ -177,24 +181,25 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
     }
   }
 
-  /** One micro-batch: plan → persist ALL jobs PENDING → execute in chunks
-    * of maxJobsPerBatch → persist statuses → watermark. The page is
-    * collected to the driver, so it must be bounded: the streaming sources
-    * admit at most maxJobsPerBatch entries per trigger and a JDBC poll
-    * reads one page. Every planned job is persisted before the watermark
-    * advances — the cap only bounds how many are *in flight* at once
-    * (the reference pauses ingestion at maxJobsInMemory rather than
-    * discarding, `ReplicationServer.java:427-439`); a crash mid-batch
-    * leaves the tail PENDING for recover() to replay. */
+  /** One page: plan → persist ALL jobs PENDING → execute in chunks of
+    * maxJobsPerBatch → persist statuses → watermark up to the page's max
+    * entry id, also when the filters dropped every entry. The page is collected
+    * to the driver, so it must be bounded: the file stream admits at most
+    * maxJobsPerBatch entries per trigger and a JDBC poll reads one page.
+    * Every planned job is persisted before the watermark advances — the
+    * cap only bounds how many are *in flight* at once (the reference
+    * pauses ingestion at maxJobsInMemory rather than discarding,
+    * `ReplicationServer.java:427-439`); a crash mid-batch leaves the tail
+    * PENDING for recover() to replay. */
   def processBatch(entries: Dataset[AuditLogEntry]): Seq[(JobState, String)] =
     processPage(entries.collect().toSeq)
 
   private def processPage(entries: Seq[AuditLogEntry]): Seq[(JobState, String)] = {
+    if (entries.isEmpty) return Seq.empty
     // Global id sort before chunking: LockExecutor orders same-key jobs only
     // within a chunk, so an unsorted page could split a DROP and a later
     // COPY of one table across chunks out of order (ST4/ST5 guarantee).
     val jobs = JobFactory.plan(entries, cfg.filters).sortBy(_.id)
-    if (jobs.isEmpty) return Seq.empty
     state.append(jobs) // PENDING before execution (ST2 ordering)
     val results = jobs.grouped(math.max(1, cfg.maxJobsPerBatch)).flatMap {
       chunk =>
@@ -202,10 +207,13 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
         state.append(rs.map(finalState))
         rs
     }.toSeq
-    watermark.set(jobs.map(_.id).max)
+    // never backwards: the file stream may deliver a late entry file whose
+    // id sits below ids already processed
+    val top = entries.map(_.id).max
+    if (watermark.get().forall(_ < top)) watermark.set(top)
     // periodic log compaction: the transition log otherwise grows with
     // every status change forever (single-writer, between batches)
-    if (cfg.compactEveryBatches > 0 &&
+    if (jobs.nonEmpty && cfg.compactEveryBatches > 0 &&
         batchCount.incrementAndGet() % cfg.compactEveryBatches == 0) {
       state.compact()
     }
@@ -237,68 +245,38 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
   }
 
   /** One JDBC poll: read the next id-keyed page after the watermark
-    * ([[graft.sources.AuditLogJdbc.fetchPage]], plain JDBC on the driver),
-    * process it, advance the watermark to the page's max id (so pages of
-    * entirely-filtered entries still make progress). Returns entries read.
-    * A page is O(pageSize) rows by construction — the reference's own
-    * fetch shape (`AuditLogReader.java:199-254`) — so a poll starts no
-    * Spark job of its own. */
+    * ([[graft.sources.AuditLogJdbc.fetchPage]], plain JDBC on the driver)
+    * and process it, which advances the watermark to the page's max id (so
+    * pages of entirely-filtered entries still make progress). Returns
+    * entries read. A page is O(pageSize) rows by construction — the
+    * reference's own fetch shape (`AuditLogReader.java:199-254`) — so a
+    * poll starts no Spark job of its own. */
   def pollJdbc(reader: AuditLogJdbc.Settings): Int = {
-    val after = watermark.get().getOrElse(0L)
-    val entries = AuditLogJdbc.fetchPage(reader, after)
-    if (entries.isEmpty) return 0
+    val entries = AuditLogJdbc.fetchPage(reader, watermark.get().getOrElse(0L))
     processPage(entries)
-    watermark.set(math.max(entries.map(_.id).max, after))
     entries.size
   }
 
-  /** Drain the JDBC audit tail: poll pages until one comes back empty
-    * (the reference sleeps 10 s and re-polls forever,
-    * `ReplicationServer.java:443-457`; callers wanting that loop wrap this
-    * in their own scheduler). Watermark semantics survive restarts — a new
-    * server over the same watermark path resumes after the last page. */
-  def drainJdbc(reader: AuditLogJdbc.Settings, maxPolls: Int = Int.MaxValue): Int = {
+  /** Drain the JDBC audit tail: poll pages until one comes back empty.
+    * The watermark is the tail's only position, so a new server over the
+    * same watermark path resumes after the last page; `--audit-jdbc` runs
+    * this in the reference's loop ([[IncrementalServer.PollWaitMillis]]
+    * between drains, `ReplicationServer.java:443-457`). */
+  def drainJdbc(reader: AuditLogJdbc.Settings): Int = {
     var total = 0
-    var polls = 0
     var got = -1
-    while (got != 0 && polls < maxPolls) {
+    while (got != 0) {
       got = pollJdbc(reader)
       total += got
-      polls += 1
     }
     total
   }
 
-  /** Structured Streaming entry over the native JDBC micro-batch source
-    * ([[graft.sources.AuditLogJdbcSource]], reading through the same
-    * [[graft.sources.AuditLogJdbc]] as [[pollJdbc]]): audit ids are the stream
-    * offsets, Spark's checkpoint commit log replaces the hand-rolled
-    * watermark for restart positioning (ST1+ST2 in their native Spark
-    * shape), and admission control caps ids per trigger (ST3). */
-  def startJdbcStream(url: String, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-      startId: Long = 0L): StreamingQuery = {
-    import spark.implicits._
-    spark.readStream
-      .format("graft-audit-jdbc")
-      .option("url", url)
-      .option("startId", startId.toString)
-      .option("rowsPerTrigger", cfg.maxJobsPerBatch.toString)
-      .load()
-      .as[AuditLogEntry]
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[AuditLogEntry], _: Long) =>
-        processBatch(batch); ()
-      }
-      .start()
-  }
-
   /** Structured Streaming entry: tail a directory of audit-entry JSON
     * (the file-source stand-in for the JDBC audit tail ST1; a MySQL
-    * deployment tails the audit table with [[startJdbcStream]] or
-    * [[drainJdbc]] instead, into the same batch processing).
+    * deployment tails the audit table with [[drainJdbc]] instead, into the
+    * same page processing). It positions by file, not by id, so an entry
+    * file landing after a higher id is still read.
     *
     * ST3 backpressure: `maxFilesPerTrigger` = maxJobsPerBatch caps
     * source-side admission (one file per audit entry), so a flood of
@@ -331,4 +309,8 @@ final class IncrementalServer(spark: SparkSession, val cfg: IncrementalConfig) {
 object IncrementalServer {
   /** Longest failure message kept on a job's state row. */
   private[graft] val MaxErrorChars = 1000
+
+  /** Sleep between JDBC drains, the reference's `POLL_WAIT_TIME_MS`
+    * (`ReplicationServer.java:56`). */
+  val PollWaitMillis = 10000L
 }

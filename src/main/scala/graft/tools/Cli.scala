@@ -8,6 +8,7 @@ import graft.catalog.{CatalogConnector, InMemoryConnector, JdbcCatalogClient, Jd
 import graft.hdfs.HdfsSync
 import graft.incremental.{IncrementalConfig, IncrementalServer}
 import graft.observability.{Metrics, StatusServer}
+import graft.sources.AuditLogJdbc
 
 /**
  * CLI entry points — the engine's analogs of the reference's three mains
@@ -124,9 +125,13 @@ object HdfsSyncTool {
 
 /** Incremental server (reference `deploy/ReplicationLauncher.main`):
   * `--src-catalog ... --dest-catalog ... --src-root ... --dest-root ...
-  *  --state-dir ... [--audit-dir dir | --audit-jdbc url] [--workers N]
-  *  [--max-jobs N] [--status-port P] [--start-after-id N]
-  *  [--statsd host:port] [--stats-dir dir]`. */
+  *  --state-dir ... [--audit-dir dir [--checkpoint-dir dir] | --audit-jdbc url]
+  *  [--workers N] [--max-jobs N] [--status-port P] [--start-after-id N]
+  *  [--statsd host:port] [--stats-dir dir]`. `--audit-jdbc` polls the
+  * audit table from the watermark; `--checkpoint-dir` (default
+  * `<state-dir>/checkpoint`) is the `--audit-dir` stream's position and
+  * applies to it only. `--start-after-id` is a one-shot reset, see
+  * [[IncrementalService.server]]. */
 object IncrementalService {
 
   def config(flags: Map[String, String]): IncrementalConfig = IncrementalConfig(
@@ -140,15 +145,30 @@ object IncrementalService {
     maxJobsPerBatch = flags.getOrElse("max-jobs", "600").toInt,
     statsDir = flags.get("stats-dir"))
 
+  private def startAfterId(flags: Map[String, String]): Long =
+    flags.get("start-after-id").map(_.toLong).getOrElse(0L)
+
+  /** The server over `--state-dir`. `--start-after-id N` (reference
+    * `ReplicationLauncher.java:275-280`) is a one-shot reset that acts on
+    * every launch which gives it: it sets the watermark, the JDBC tail's
+    * only position, to N, so a restart that still passes the flag replays
+    * every id above N instead of resuming. The `--audit-dir` stream also
+    * filters on it, but positions by its checkpoint. */
+  def server(spark: SparkSession, flags: Map[String, String]): IncrementalServer = {
+    val server = new IncrementalServer(spark, config(flags))
+    if (startAfterId(flags) > 0L) server.watermark.set(startAfterId(flags))
+    server
+  }
+
+  /** One round of the `--audit-jdbc` loop: drain every page after the
+    * watermark; returns the entries read. */
+  def drainAuditJdbc(server: IncrementalServer, flags: Map[String, String]): Int =
+    server.drainJdbc(AuditLogJdbc.Settings(flags("audit-jdbc")))
+
   def main(args: Array[String]): Unit = {
     val flags = Cli.parseFlags(args.toSeq)
     val spark = GraftSession.local("graft-incremental")
-    val server = new IncrementalServer(spark, config(flags))
-    // --start-after-id (reference `ReplicationLauncher.java:275-280`):
-    // resets the watermark (the JDBC poll loop's position) AND feeds the
-    // streaming sources below, which position independently of it
-    val startAfterId = flags.get("start-after-id").map(_.toLong).getOrElse(0L)
-    if (startAfterId > 0L) server.watermark.set(startAfterId)
+    val server = this.server(spark, flags)
     // --statsd host:port (reference StatsTracker's daemon address)
     val statsd = flags.get("statsd").map { hp =>
       val Array(h, p) = hp.split(':')
@@ -165,13 +185,14 @@ object IncrementalService {
       case (Some(dir), _) =>
         val q = server.start(dir, flags.getOrElse("checkpoint-dir",
           flags("state-dir").stripSuffix("/") + "/checkpoint"),
-          startAfterId = startAfterId)
+          startAfterId = startAfterId(flags))
         q.awaitTermination()
-      case (_, Some(url)) =>
-        val q = server.startJdbcStream(url, flags.getOrElse("checkpoint-dir",
-          flags("state-dir").stripSuffix("/") + "/checkpoint"),
-          startId = startAfterId)
-        q.awaitTermination()
+      case (_, Some(_)) =>
+        // the reference's poll loop: drain, then sleep 10 s, forever
+        while (true) {
+          drainAuditJdbc(server, flags)
+          Thread.sleep(IncrementalServer.PollWaitMillis)
+        }
       case _ => throw new IllegalArgumentException(
         "need --audit-dir or --audit-jdbc")
     }

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.batch.{BatchConfig, BatchReplication}
+import graft.batch.{BatchConfig, BatchReplication, BatchStats}
 import graft.catalog.{CatalogClient, CatalogConnector, InMemoryConnector}
 import graft.fs.CopyExec
 import graft.model._
@@ -109,6 +109,48 @@ class BatchReplicationSpec extends TestBase {
     finally staging.close()
   }
 
+  test("driver and executor commit paths yield equal stats and dest catalogs") {
+    val srcWh = tmpDir("paths-src-wh")
+    val srcConn = freshCatalog("paths-src")
+    val src = srcConn.connect()
+    val part = partitionedTable("db1", "part", srcWh)
+    src.createTable(part)
+    Seq("ds=1/hr=1", "ds=1/hr=2").foreach(p => src.addPartition(partition(part, p)))
+    src.createTable(unpartitionedTable("db1", "unp", srcWh))
+    src.createTable(unpartitionedTable("db1", "gone", srcWh))
+    def cfgFor(name: String, wrap: InMemoryConnector => CatalogConnector) =
+      BatchConfig(wrap(srcConn), wrap(freshCatalog(s"paths-$name-dest")),
+        srcWh.toUri.toString.stripSuffix("/"),
+        tmpDir(s"paths-$name-wh").toUri.toString.stripSuffix("/"),
+        planDir = tmpDir(s"paths-$name-plan").toUri.toString + "plan",
+        copyParallelism = 4)
+    val executor = cfgFor("executor", identity)
+    val driver = cfgFor("driver", DriverOnly)
+    assert(!driver.destConnector.executorSafe)
+    /** Every dest table and partition, locations relative to the dest root. */
+    def destCatalog(cfg: BatchConfig) = {
+      val c = cfg.destConnector.connect()
+      def rel(loc: String) = loc.stripPrefix(cfg.destFsRoot)
+      for (db <- c.listDatabases(); t <- c.listTables(db)) yield (
+        c.getTable(db, t).map(m => m.copy(location = rel(m.location))),
+        c.listPartitionNames(db, t).sorted.flatMap(c.getPartition(db, t, _))
+          .map(p => p.copy(location = rel(p.location))))
+    }
+    def runBoth() = {
+      val stats = (BatchReplication.run(spark, executor), BatchReplication.run(spark, driver))
+      assert(stats._1 == stats._2)
+      assert(destCatalog(executor) == destCatalog(driver))
+      stats._1
+    }
+    assert(runBoth() == BatchStats(planned = 5, copies = 5, drops = 0, commitFailures = 0))
+    src.dropTable("db1", "gone")
+    src.dropPartition("db1", "part", "ds=1/hr=2")
+    assert(runBoth() == BatchStats(planned = 2, copies = 0, drops = 2, commitFailures = 0))
+    assert(destCatalog(driver).map(_._1.get.table).sorted == Seq("part", "unp"))
+    // converged: an empty plan commits through both paths as all zeros
+    assert(runBoth() == BatchStats.Zero)
+  }
+
   test("blacklist prunes before planning") {
     val srcWh = tmpDir("bl-src-wh")
     val srcConn = freshCatalog("bl-src")
@@ -205,4 +247,11 @@ final case class PartitionReadLog(inner: InMemoryConnector) extends CatalogConne
     def renamePartition(db: String, table: String, from: String, to: PartitionMeta): Unit =
       c.renamePartition(db, table, from, to)
   }
+}
+
+/** In-memory connector reachable only from the driver, as a catalog bound
+  * to the driver's SparkSession is: routes stage 3 through its driver pass. */
+final case class DriverOnly(inner: InMemoryConnector) extends CatalogConnector {
+  def connect(): CatalogClient = inner.connect()
+  override def executorSafe: Boolean = false
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.TaskType
-import graft.tools.{BatchReplicate, Cli, HdfsSyncTool}
+import graft.tools.{BatchReplicate, Cli, HdfsSyncTool, IncrementalService}
 
 /** CLI surface: flag parsing, connector specs, and a full batch run with
   * --step resume driven through the CLI layer. */
@@ -54,6 +54,50 @@ class CliSpec extends TestBase {
       .blacklist == Seq(("^tmp_.*", ".*"), ("x", "y")))
     assert(BatchReplicate.config(flags + ("verify-checksum" -> "true"))
       .verifyChecksum)
+  }
+
+  test("incremental CLI: --audit-jdbc drains from the watermark; --start-after-id resets it") {
+    val srcWh = tmpDir("cli-inc-src-wh")
+    val srcConn = freshCatalog("cli-inc-src")
+    val destId = s"cli-inc-dest-${System.nanoTime()}"
+    val url = s"jdbc:derby:${tmpDir("cli-inc-audit").resolve("db")};create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    val st = conn.createStatement()
+    st.executeUpdate("CREATE TABLE audit_log (id BIGINT PRIMARY KEY, " +
+      "create_time TIMESTAMP, command_type VARCHAR(64), command VARCHAR(4000))")
+    st.executeUpdate("CREATE TABLE audit_objects (audit_log_id BIGINT, " +
+      "category VARCHAR(32), object_type VARCHAR(32), name VARCHAR(256))")
+    def create(id: Int): Unit = {
+      srcConn.connect().createTable(unpartitionedTable("db1", s"t$id", srcWh))
+      st.executeUpdate(s"INSERT INTO audit_objects VALUES ($id, 'OUTPUT', 'TABLE', 'db1.t$id')")
+      st.executeUpdate(s"INSERT INTO audit_log VALUES ($id, " +
+        s"TIMESTAMP('2024-01-01 00:00:00'), 'CREATETABLE', 'cmd-$id')")
+    }
+    (1 to 3).foreach(create)
+    val flags = Map(
+      "src-catalog" -> s"inmemory:${srcConn.id}",
+      "dest-catalog" -> s"inmemory:$destId",
+      "src-root" -> srcWh.toUri.toString.stripSuffix("/"),
+      "dest-root" -> tmpDir("cli-inc-dest-wh").toUri.toString.stripSuffix("/"),
+      "state-dir" -> tmpDir("cli-inc-state").toUri.toString,
+      "audit-jdbc" -> url, "workers" -> "2")
+    def launch(f: Map[String, String]) = IncrementalService.server(spark, f)
+
+    val first = launch(flags + ("start-after-id" -> "1"))
+    assert(IncrementalService.drainAuditJdbc(first, flags) == 2)
+    val dest = graft.catalog.InMemoryConnector(destId).connect()
+    assert(dest.getTable("db1", "t1").isEmpty)
+    assert(Seq("t2", "t3").forall(dest.getTable("db1", _).isDefined))
+    // a relaunch without the flag resumes from the watermark alone
+    create(4)
+    assert(IncrementalService.drainAuditJdbc(launch(flags), flags) == 1)
+    assert(dest.getTable("db1", "t4").isDefined)
+    // a relaunch that still gives the flag resets it and replays above 1
+    val again = launch(flags + ("start-after-id" -> "1"))
+    assert(again.watermark.get().contains(1L))
+    assert(IncrementalService.drainAuditJdbc(again, flags) == 3)
+    assert(again.watermark.get().contains(4L))
+    conn.close()
   }
 
   test("hdfs sync CLI: dry run plans without touching the dest") {

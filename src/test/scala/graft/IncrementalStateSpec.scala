@@ -68,6 +68,17 @@ class IncrementalStateSpec extends TestBase {
     assert(server.watermark.get().contains(4L))
   }
 
+  test("a page the filters drop whole advances the watermark") {
+    import spark.implicits._
+    val (server, _, _, _) = newServer("allfiltered")
+    server.watermark.set(4L)
+    // SHOWTABLES is a no-op command type; a QUERY with no outputs writes nothing
+    val page = spark.createDataset(Seq(entry(5, "SHOWTABLES"), entry(6, "QUERY")))
+    assert(server.processBatch(page).isEmpty)
+    assert(server.state.current().collect().isEmpty)
+    assert(server.watermark.get().contains(6L))
+  }
+
   test("state log: a stray hidden tmp append is invisible to current() and restoreRunnable") {
     val dir = tmpDir("stray-state")
     val path = dir.toUri.toString + "jobs"
